@@ -41,28 +41,41 @@ def test_apply_deletes_broadcast_gated_on_count(spark, monkeypatch):
 def test_cdc_update_runs_unhinted_above_limit(spark, tmp_path, monkeypatch):
     """End-to-end: with the limit forced to 0 every key-set broadcast
     in the update cycle (semi-join fetch, pre-images, merge anti-join,
-    delete anti-join) falls back to shuffle joins — and the epoch's
-    results are byte-identical to the broadcast plan's."""
+    delete anti-join) and in an apply_delta epoch falls back to
+    shuffle joins — and the results are byte-identical to the
+    broadcast plan's."""
     base = spark.range(200).select(
         F.col("id").alias("k"), (F.col("id") * 7 % 13).alias("v")
     )
     mutated = base.withColumn(
         "v", F.when(F.col("k") % 10 == 0, F.col("v") + 1).otherwise(F.col("v"))
     ).filter(F.col("k") % 17 != 0)
+    batch = spark.range(190, 210).select(
+        F.col("id").alias("k"), F.lit(5).cast("long").alias("v")
+    )
+    broadcasts = []
+    real_broadcast = F.broadcast
+    monkeypatch.setattr(
+        F, "broadcast", lambda df: broadcasts.append(df) or real_broadcast(df)
+    )
 
     def run(root):
+        broadcasts.clear()
         eng = CdcEngine(TableStore(spark, str(root)))
         spec = TableSpec("t", "k", has_scores=False)
         eng.update(spec, base)
         stats = eng.update(spec, mutated)
+        eng.apply_delta(spec, batch)
         rows = sorted(
             (r["k"], r["v"]) for r in eng.store.read("t").collect()
         )
         return stats, rows
 
     s_hint, rows_hint = run(tmp_path / "hinted")
+    assert broadcasts
     monkeypatch.setattr(cdc_mod, "BROADCAST_KEY_LIMIT", 0)
     s_nohint, rows_nohint = run(tmp_path / "unhinted")
+    assert not broadcasts
     assert rows_hint == rows_nohint
     assert (s_hint.upserts, s_hint.deletes, s_hint.deletes_applied) == (
         s_nohint.upserts,

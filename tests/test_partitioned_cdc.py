@@ -59,6 +59,24 @@ def test_partitioned_update_rewrites_only_touched_buckets(spark, tmp_path):
     assert g_engine._read_main("items").count() == 499
 
 
+def test_partitioned_delete_empties_bucket(spark, tmp_path):
+    """Deleting the only row of a bucket must drop the bucket: dynamic
+    overwrite never replaces a partition absent from the new data."""
+    from updater_spark.sources.store import TableStore
+
+    engine = CdcEngine(
+        TableStore(spark, str(tmp_path / "store")), partition_buckets=64
+    )
+    spec = TableSpec("items", "id")
+    s0 = [Row(id=i, v=i) for i in range(1, 11)]
+    engine.update(spec, spark.createDataFrame(s0))
+    st = engine.update(spec, spark.createDataFrame(s0[:-1]))
+    assert st.deletes == 1 and st.deletes_applied and st.total_rows == 9
+    assert sorted(r["id"] for r in engine._read_main("items").collect()) == list(
+        range(1, 10)
+    )
+
+
 def test_partitioned_matches_full_rewrite(spark, tmp_path):
     """Same scenario through both storage modes ⇒ identical replicas."""
     from updater_spark.sources.store import TableStore

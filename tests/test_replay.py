@@ -105,3 +105,34 @@ def test_engine_replay_full_fidelity(spark, tmp_path):
     assert snap(eng.replay(spec, 2)) == snap(s2)
     # epoch 2 == current replica
     assert snap(eng.replay(spec, 2)) == snap(store.read("t"))
+
+
+def test_engine_replay_full_across_apply_delta(spark, tmp_path):
+    """A delta-feed epoch writes the same full-fidelity changelog as a
+    snapshot epoch: update pre-images tagged ``_change_type`` and
+    insert markers, so replay() rewinds through it exactly."""
+    from updater_spark.plans.cdc import CdcEngine
+    from updater_spark.schema import TableSpec
+    from updater_spark.sources.store import TableStore
+
+    eng = CdcEngine(
+        TableStore(spark, str(tmp_path / "store")), changelog_mode="full"
+    )
+    spec = TableSpec(name="t", primary_key="id")
+    schema = "id long, v long"
+    s0 = [(i, 10 * i) for i in range(1, 11)]
+    s1 = [r for r in s0 if r[0] != 10]  # epoch 1: delete 10
+    # epoch 2 (delta feed): update 1, re-deliver 2 unchanged, insert 20
+    batch = [(1, 11), (2, 20), (20, 200)]
+    s2 = sorted([r for r in s1 if r[0] != 1] + [(1, 11), (20, 200)])
+
+    eng.bootstrap(spec, spark.createDataFrame(s0, schema))
+    eng.update(spec, spark.createDataFrame(s1, schema))
+    eng.apply_delta(spec, spark.createDataFrame(batch, schema))
+
+    def snap(epoch):
+        return sorted(tuple(r) for r in eng.replay(spec, epoch).collect())
+
+    assert snap(0) == s0
+    assert snap(1) == s1
+    assert snap(2) == s2

@@ -228,6 +228,10 @@ def test_apply_delta_rejects_schema_change(spark, tmp_store):
     batch = spark.createDataFrame([Row(id=1, name="u1", tier="x", bal=0)])
     with pytest.raises(ValueError, match="schema change in delta feed"):
         eng.apply_delta(SPEC, batch)
+    # same names, bal retyped bigint -> double
+    retyped = spark.createDataFrame([Row(id=1, name="u1", bal=10.0)])
+    with pytest.raises(ValueError, match="schema change in delta feed"):
+        eng.apply_delta(SPEC, retyped)
 
 
 def test_bad_policy_rejected(spark, tmp_store):
@@ -593,8 +597,7 @@ def test_type_change_on_legacy_sidecar_is_skipped(spark, tmp_store):
     # rewrite the sidecar in the legacy bare-list format
     legacy = json.dumps(["id", "name", "bal"])
     tmp_store.write_sidecar("acct__fingerprints", "basis", legacy)
-    assert eng._read_basis("acct") == ["id", "name", "bal"]
-    assert eng._read_basis_types("acct") is None
+    assert eng._read_basis("acct") == (["id", "name", "bal"], None)
 
     # a same-schema epoch runs clean (no evolution) and re-arms types
     src2 = spark.createDataFrame(
@@ -605,7 +608,7 @@ def test_type_change_on_legacy_sidecar_is_skipped(spark, tmp_store):
     )
     stats = eng.update(SPEC, src2)
     assert stats.extra == {} and stats.upserts == 1
-    assert eng._read_basis_types("acct") == {
+    assert eng._read_basis("acct")[1] == {
         "id": "bigint",
         "name": "string",
         "bal": "bigint",

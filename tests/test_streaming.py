@@ -41,6 +41,31 @@ def test_cdc_stream_two_snapshots(spark, tmp_path):
     assert changed == {i: i * 10 + 1 for i in range(1, 6)}
 
 
+def test_apply_delta_feed_and_stats(spark, tmp_path):
+    """A delta-feed epoch deletes nothing, so its ``__deleted`` feed is
+    empty (not the previous epoch's keys, which downstream consumers
+    would re-apply), and its stats count updates like update()'s."""
+    spec = TableSpec("items", "id")
+    store = TableStore(spark, str(tmp_path / "store"))
+    engine = CdcEngine(store)
+    schema = "id long, v long"
+    s0 = [(i, 10 * i) for i in range(1, 11)]
+    engine.update(spec, spark.createDataFrame(s0, schema))
+    engine.update(spec, spark.createDataFrame(s0[:-1], schema))
+    assert [r["id"] for r in store.read("items__deleted").collect()] == [10]
+
+    stats = engine.apply_delta(
+        spec, spark.createDataFrame([(1, 11), (2, 20), (20, 200)], schema)
+    )
+    assert store.read("items__deleted").count() == 0
+    assert (stats.upserts, stats.updates, stats.deletes) == (2, 1, 0)
+    assert stats.deletes_applied and stats.total_rows == 10
+    assert sorted(tuple(r) for r in store.read("items__delta").collect()) == [
+        (1, 11),
+        (20, 200),
+    ]
+
+
 def test_windowed_event_counts_batch_parity(spark):
     import datetime as dt
 

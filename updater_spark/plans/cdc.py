@@ -10,7 +10,8 @@ Re-expresses the reference's three entry points (SURVEY.md §3):
   cached replica fingerprints (full-outer join), fetch full rows for
   changed/new keys (broadcast semi join), archive pre-images, upsert,
   apply guarded deletes, rotate fingerprints
-  (download.py:50-63 + post_download 532-604).
+  (download.py:50-63 + post_download 532-604). ``apply_delta`` runs
+  the same epoch sequence over a delta feed (arriving rows only).
 - ``post_update`` — derived aggregates ``tribe_active``/``tribe_stats``
   (post_update.py:18-91).
 
@@ -35,11 +36,16 @@ from updater_spark.functions.scores import (
     apply_scores,
     normalize_names,
 )
-from updater_spark.operators.diff import snapshot_diff, split_diff
+from updater_spark.operators.diff import (
+    DELETE,
+    INSERT,
+    UPDATE,
+    snapshot_diff,
+    split_diff,
+)
 from updater_spark.operators.merge import (
     BROADCAST_KEY_LIMIT,
     DELETE_GUARD_DEFAULT,
-    DeleteResult,
     _maybe_broadcast,
     changelog_preimages,
     changelog_replay,
@@ -76,11 +82,12 @@ class CdcEngine:
     writes), ``{name}__changelog`` pre-image history,
     ``{name}__delta`` this run's changed rows (the ``{name}_new``
     staging table, download.py:486-506), ``{name}__deleted`` this
-    run's APPLIED delete keys (empty when the guard tripped or on
-    bootstrap) — together ``__delta`` + ``__deleted`` are the full
-    per-epoch change feed a downstream consumer (e.g. the incremental
-    dedup index, operators/dedup_index.py::apply_cdc_epoch) needs to
-    mirror the table.
+    run's APPLIED delete keys (empty when the guard tripped, on
+    bootstrap and for a delta-feed ``apply_delta`` epoch) — together
+    ``__delta`` + ``__deleted`` are the full per-epoch change feed a
+    downstream consumer (e.g. the incremental dedup index,
+    operators/dedup_index.py::apply_cdc_epoch) needs to mirror the
+    table.
     """
 
     BUCKET_COL = "_bucket"
@@ -229,29 +236,23 @@ class CdcEngine:
             json.dumps({"columns": data_cols, "types": types or {}}),
         )
 
-    def _read_basis(self, name: str) -> list[str] | None:
+    def _read_basis(
+        self, name: str
+    ) -> tuple[list[str] | None, dict[str, str] | None]:
+        """``(columns, types)`` from the basis sidecar; ``(None, None)``
+        when there is none. Legacy (pre-r8) sidecars stored a bare
+        column list and read ``types=None``: type drift is undetectable
+        for them until the first post-upgrade epoch rewrites the
+        sidecar with types."""
         import json
 
         raw = self.store.read_sidecar(self._fp_name(name), "basis")
         if not raw:
-            return None
+            return None, None
         parsed = json.loads(raw)
-        # legacy (pre-r8) sidecars stored a bare column list
-        return parsed["columns"] if isinstance(parsed, dict) else parsed
-
-    def _read_basis_types(self, name: str) -> dict[str, str] | None:
-        """Column → Spark type string from the basis sidecar, or None
-        for legacy sidecars that predate type recording (their first
-        post-upgrade epoch rewrites the sidecar with types)."""
-        import json
-
-        raw = self.store.read_sidecar(self._fp_name(name), "basis")
-        if not raw:
-            return None
-        parsed = json.loads(raw)
-        if isinstance(parsed, dict) and parsed.get("types"):
-            return parsed["types"]
-        return None
+        if isinstance(parsed, list):
+            return parsed, None
+        return parsed["columns"], parsed.get("types") or None
 
     @staticmethod
     def _basis_types(df: DataFrame, cols: list[str]) -> dict[str, str]:
@@ -472,15 +473,111 @@ class CdcEngine:
 
     # -- entry point A: incremental update (download.py:50-63) ---------
     def update(self, spec: TableSpec, source: DataFrame) -> UpdateStats:
+        """One epoch from a full source snapshot: keys missing from
+        the snapshot are deletes (subject to ``delete_guard``)."""
+        return self._epoch(spec, source, delta_feed=False)
+
+    # -- streaming delta-apply (micro-batch mode) ----------------------
+    def apply_delta(self, spec: TableSpec, batch: DataFrame) -> UpdateStats:
+        """One epoch from a micro-batch holding only *arriving* rows (a
+        delta feed, e.g. a Structured Streaming file source).
+
+        Every arriving key whose fingerprint differs from the cache is
+        upserted (unchanged re-deliveries are dropped — the same skip
+        the reference's hash compare gives, download.py:189-205), with
+        the same changelog, ``__delta`` and merge as ``update``. It
+        never deletes: deletes in a delta feed must be explicit (tomb-
+        stone rows), which the reference has no notion of."""
+        return self._epoch(spec, batch, delta_feed=True)
+
+    def _schema_change(
+        self,
+        spec: TableSpec,
+        stored_basis: list[str],
+        stored_types: dict[str, str] | None,
+        data_cols: list[str],
+        src_types: dict[str, str],
+    ) -> dict | None:
+        """The epoch's schema boundary against the stored fingerprint
+        basis, or None. ``policy`` records the EFFECTIVE policy, not
+        the configured one — consumers reading only it must see what
+        actually ran (ADVICE r7); ``policy_fallback`` keeps the why."""
+        # TYPE drift with unchanged names shifts the fingerprint
+        # rendering just the same ('1' vs '1.0') — and the cached
+        # hashes for a retyped column are unusable, so rebase cannot
+        # reuse them either (ADVICE r7). Legacy sidecars have no types
+        # → skip (their first post-upgrade epoch records them).
+        type_changed = [
+            (c, stored_types[c], src_types[c])
+            for c in data_cols
+            if stored_types
+            and c in stored_types
+            and src_types.get(c) != stored_types[c]
+        ]
+        if stored_basis == data_cols and not type_changed:
+            return None
+        added = [c for c in data_cols if c not in stored_basis]
+        dropped = [c for c in stored_basis if c not in data_cols]
+        evolution = {
+            "added": added,
+            "dropped": dropped,
+            "reordered": stored_basis != data_cols and not added and not dropped,
+            "policy": self.schema_change_policy,
+        }
+        fallback = None
+        if type_changed:
+            evolution["type_changed"] = type_changed
+            fallback = (
+                f"column type change {type_changed} re-renders every "
+                "cached fingerprint — there is no common-column hash to "
+                "rebase onto"
+            )
+        elif dropped and spec.normalize_name_col is not None:
+            # A drop-rebase recomputes replica-side hashes from the
+            # STORED rows — valid only when the replica holds the raw
+            # values the cache hashed. normalize_name_col rewrites a
+            # data column at write time (name || '#0000'), so those
+            # hashes would mismatch every un-suffixed source row and
+            # the "churn-proportional" promise would silently become a
+            # bootstrap-sized delta.
+            fallback = (
+                "dropped-column rebase needs raw replica values, but "
+                f"normalize_name_col={spec.normalize_name_col!r} "
+                "rewrites them at write time"
+            )
+        if fallback and self.schema_change_policy == "rebase":
+            evolution["policy"] = "full_churn"
+            evolution["policy_fallback"] = f"full_churn: {fallback}"
+        return evolution
+
+    def _epoch(
+        self, spec: TableSpec, source: DataFrame, delta_feed: bool
+    ) -> UpdateStats:
+        """The one CDC epoch sequence behind ``update`` (a full
+        snapshot) and ``apply_delta`` (``delta_feed=True``): diff,
+        fetch, changelog, merge, rotate fingerprints. A delta feed
+        differs in exactly three places:
+
+        - replica-only keys did not arrive rather than vanish: they are
+          dropped before the diff is persisted (the cache then holds
+          O(batch) rows), so ``deletes`` is 0 and ``__deleted`` empty;
+        - the fingerprint cache rotates by upserting the changed keys'
+          hashes instead of being replaced by the source's;
+        - any schema boundary raises ``ValueError``: there is no full
+          snapshot to backfill added columns or re-base dropped ones
+          from, so the boundary epoch must come through ``update``.
+        """
         if not self._fp_exists(spec.name):
             return self.bootstrap(spec, source)
 
+        pk = spec.primary_key
         cols = classify_df(spec, source) if spec.has_scores else None
         data_cols = cols.data_columns if cols else list(source.columns)
+        src_types = self._basis_types(source, data_cols)
 
-        # Schema-evolution detection: the source's ordered data-column
-        # list vs the basis the cached fingerprints were computed over.
-        stored_basis = self._read_basis(spec.name)
+        # Schema-evolution detection: the source's ordered (name, type)
+        # data columns vs the basis the cached fingerprints cover.
+        stored_basis, stored_types = self._read_basis(spec.name)
         if stored_basis is None:
             # tables bootstrapped before the basis sidecar existed:
             # the replica's data columns follow the last source's
@@ -493,112 +590,39 @@ class CdcEngine:
             # current values into pre-upgrade reconstructions
             if self._read_basis_history(spec.name) is None:
                 self._append_basis_history(spec.name, 0, stored_basis)
-        evolution: dict | None = None
-        if stored_basis is not None and stored_basis != data_cols:
-            evolution = {
-                "added": [c for c in data_cols if c not in stored_basis],
-                "dropped": [c for c in stored_basis if c not in data_cols],
-                "policy": self.schema_change_policy,
-            }
-            evolution["reordered"] = (
-                not evolution["added"] and not evolution["dropped"]
-            )
-
-        # TYPE drift with unchanged names bypasses the name diff above
-        # but shifts the fingerprint rendering just the same ('1' vs
-        # '1.0') — and the cached hashes for a retyped column are
-        # unusable, so rebase cannot reuse them either. Detect it from
-        # the (name, type) basis sidecar and run the epoch as a loud
-        # schema boundary with honest full churn (ADVICE r7). Legacy
-        # sidecars predate type recording → None → skip (their first
-        # post-upgrade epoch rewrites the sidecar with types).
-        stored_types = self._read_basis_types(spec.name)
-        src_types = self._basis_types(source, data_cols)
-        if stored_types is not None:
-            type_changed = [
-                (c, stored_types[c], src_types[c])
-                for c in data_cols
-                if c in stored_types and src_types.get(c) != stored_types[c]
-            ]
-            if type_changed:
-                if evolution is None:
-                    evolution = {
-                        "added": [],
-                        "dropped": [],
-                        "reordered": False,
-                        "policy": self.schema_change_policy,
-                    }
-                evolution["type_changed"] = type_changed
-                if self.schema_change_policy == "rebase":
-                    evolution["policy"] = "full_churn"
-                    evolution["policy_fallback"] = (
-                        "full_churn: column type change "
-                        f"{type_changed} re-renders every cached "
-                        "fingerprint — there is no common-column hash "
-                        "to rebase onto"
-                    )
-
-        # A drop-rebase recomputes replica-side hashes from the STORED
-        # rows — valid only when the replica holds the raw values the
-        # cache hashed. normalize_name_col rewrites a data column at
-        # write time (name || '#0000'), so those hashes would mismatch
-        # every un-suffixed source row and the "churn-proportional"
-        # promise would silently become a bootstrap-sized delta. Fall
-        # back to honest full churn for that epoch and say so.
-        rebase = (
-            evolution is not None
-            and self.schema_change_policy == "rebase"
-            and not evolution.get("type_changed")
+        evolution = self._schema_change(
+            spec, stored_basis, stored_types, data_cols, src_types
         )
-        if (
-            rebase
-            and evolution["dropped"]
-            and spec.normalize_name_col is not None
-        ):
-            rebase = False
-            # record the EFFECTIVE policy, not the configured one —
-            # consumers reading only evolution['policy'] must see what
-            # actually ran (ADVICE r7); policy_fallback keeps the why
-            evolution["policy"] = "full_churn"
-            evolution["policy_fallback"] = (
-                "full_churn: dropped-column rebase needs raw replica "
-                f"values, but normalize_name_col="
-                f"{spec.normalize_name_col!r} rewrites them at write "
-                "time"
+        if evolution and delta_feed:
+            raise ValueError(
+                f"schema change in delta feed for {spec.name!r} "
+                f"(basis {stored_basis} -> {data_cols}, type changes "
+                f"{evolution.get('type_changed', [])}); run a "
+                "full-snapshot update() for the boundary epoch"
             )
+        rebase = evolution is not None and evolution["policy"] == "rebase"
 
         # S2: external scan → (id, hash); S1: cached replica hashes.
+        basis = data_cols
+        rep_fp = self._read_fp(spec.name)
         if rebase:
             # diff over the COMMON columns (stored order): churn stays
             # proportional to rows whose surviving values changed
-            common = [c for c in stored_basis if c in data_cols]
-            src_fp = fingerprint_table(
-                source, spec.primary_key, common, self.algo
-            )
+            basis = [c for c in stored_basis if c in data_cols]
             if evolution["dropped"]:
                 # cached hashes cover the dropped columns — rebase the
                 # replica side with one row-local scan (projection
                 # only, no shuffle; the replica holds the same values
                 # the cache hashed — guaranteed by the normalize
-                # fallback above)
+                # fallback in _schema_change). An add-only change
+                # keeps the cache: common == stored basis.
                 rep_fp = fingerprint_table(
-                    self._read_main(spec.name),
-                    spec.primary_key,
-                    common,
-                    self.algo,
+                    self._read_main(spec.name), pk, basis, self.algo
                 )
-            else:
-                # add-only: common == stored basis, the cache is
-                # already the right hash — no replica scan at all
-                rep_fp = self._read_fp(spec.name)
-        else:
-            src_fp = fingerprint_table(
-                source, spec.primary_key, data_cols, self.algo
-            )
-            rep_fp = self._read_fp(spec.name)
+        src_fp = fingerprint_table(source, pk, basis, self.algo)
 
         # J1: the diff join. Materialized once (small output: changed
-        # keys only) so the three consumers don't re-run the join.
+        # keys only) so the consumers don't re-run the join.
         # At a full-churn schema boundary the cached hashes were
         # rendered over a DIFFERENT basis than src_fp — cross-basis
         # hash equality is a meaningless coincidence ('1x' from [name]
@@ -609,12 +633,16 @@ class CdcEngine:
             src_fp,
             rep_fp,
             assume_changed=(evolution is not None and not rebase),
-        ).persist()
+        )
+        if delta_feed:
+            diff = diff.filter(F.col("change_type") != DELETE)
+        diff = diff.persist()
+        delta = None
         try:
             parts = split_diff(diff)
 
             # ONE job materializes the diff and yields every count the
-            # cycle needs: upsert/update stats AND the delete guard —
+            # epoch needs: upsert/update stats AND the delete guard —
             # no separate count() jobs later.
             counts = {
                 r["change_type"]: r["n"]
@@ -622,8 +650,8 @@ class CdcEngine:
                 .agg(F.count(F.lit(1)).alias("n"))
                 .collect()
             }
-            n_deletes = counts.get("delete", 0)
-            n_upserts = counts.get("insert", 0) + counts.get("update", 0)
+            n_deletes = counts.get(DELETE, 0)
+            n_upserts = counts.get(INSERT, 0) + counts.get(UPDATE, 0)
             # key sets beyond BROADCAST_KEY_LIMIT rows are never
             # hard-broadcast — EVERY forced broadcast below gates on
             # one of these measured counts (VERDICT r5 #4), so a
@@ -640,43 +668,45 @@ class CdcEngine:
                 spec,
                 semi_join_fetch(
                     source.select(*data_cols),
-                    parts.upserts.withColumnRenamed("id", spec.primary_key),
-                    spec.primary_key,
+                    parts.upserts.withColumnRenamed("id", pk),
+                    pk,
                     hint_broadcast=hint,
                 ),
             ).persist()
 
             old = self._read_main(spec.name)
-            delete_keys = parts.deletes.withColumnRenamed("id", spec.primary_key)
+            delete_keys = parts.deletes.withColumnRenamed("id", pk)
             apply_del = n_deletes < self.delete_guard
+            # the epoch's applied delete keys, None when there are none
+            applied = delete_keys if apply_del and n_deletes else None
 
             # J5: changelog pre-images (old versions of updated rows);
             # "full" mode adds delete pre-images + insert markers so
             # replay() can reconstruct any epoch.
             preimages = changelog_preimages(
                 old,
-                parts.updates.withColumnRenamed("id", spec.primary_key),
-                spec.primary_key,
+                parts.updates.withColumnRenamed("id", pk),
+                pk,
                 hint_broadcast=hint,
             )
             if self.changelog_mode == "full":
                 preimages = preimages.withColumn(self.CT_COL, F.lit("update"))
-                if apply_del:
+                if applied is not None:
                     del_pre = old.join(
-                        _maybe_broadcast(delete_keys.distinct(), del_hint),
-                        spec.primary_key,
+                        _maybe_broadcast(applied.distinct(), del_hint),
+                        pk,
                         "semi",
                     ).withColumn(self.CT_COL, F.lit("delete"))
                     preimages = preimages.unionByName(del_pre)
                 ins_marker = (
-                    diff.filter(F.col("change_type") == "insert")
-                    .select(F.col("id").alias(spec.primary_key))
+                    diff.filter(F.col("change_type") == INSERT)
+                    .select(F.col("id").alias(pk))
                     .select(
-                        spec.primary_key,
+                        pk,
                         *[
                             F.lit(None).cast(f.dataType).alias(f.name)
                             for f in old.schema.fields
-                            if f.name != spec.primary_key
+                            if f.name != pk
                         ],
                     )
                     .withColumn(self.CT_COL, F.lit("insert"))
@@ -688,204 +718,147 @@ class CdcEngine:
 
             self.store.write(f"{spec.name}__delta", delta)
             # the epoch's applied delete keys — empty when the guard
-            # tripped, so consumers never act on skipped deletes
+            # tripped or nothing was deleted, so consumers never act
+            # on skipped deletes
             self.store.write(
                 f"{spec.name}__deleted",
-                delete_keys if apply_del else delete_keys.limit(0),
+                applied if applied is not None else delete_keys.limit(0),
             )
-            if evolution:
-                # a schema boundary re-shapes every surviving row, so
-                # bucket pruning is impossible — merge with alignment
-                # and rewrite the table (all buckets) in the new shape
-                merged = self._merge_evolved(
+            if evolution or n_upserts or applied is not None:
+                added = (
+                    [c for c in evolution["added"] if c not in old.columns]
+                    if evolution
+                    else []
+                )
+                self._write_main(
                     spec,
-                    old,
                     delta,
-                    delete_keys,
-                    apply_del,
-                    source,
-                    evolution,
+                    applied,
+                    source.select(pk, *added) if added else None,
+                    evolution is not None,
                     hint,
                     del_hint,
                 )
-                if self.partition_buckets:
-                    # dynamic overwrite (NOT a static full overwrite):
-                    # the merged plan scans the very files being
-                    # replaced, and dynamic mode stages the new files
-                    # and swaps partitions only at commit — a static
-                    # overwrite deletes the root before the scan runs.
-                    # The bucket census is collected BEFORE the write
-                    # (the plan re-executes for it; the old files must
-                    # still exist).
-                    merged_b = merged.withColumn(
-                        self.BUCKET_COL, self._bucket_expr(spec.primary_key)
-                    )
-                    present = {
-                        r[0]
-                        for r in merged_b.select(self.BUCKET_COL)
-                        .distinct()
-                        .collect()
-                    }
-                    self.store.overwrite_partitions(
-                        spec.name, merged_b, self.BUCKET_COL
-                    )
-                    emptied = [
-                        b
-                        for b in range(self.partition_buckets)
-                        if b not in present
-                    ]
-                    if emptied:
-                        self.store.drop_partitions(
-                            spec.name, self.BUCKET_COL, emptied
-                        )
-                else:
-                    self.store.write(spec.name, merged)
-            elif self.partition_buckets:
-                self._write_incremental_partitioned(
-                    spec,
-                    old,
-                    delta,
-                    delete_keys,
-                    apply_del,
-                    hint_broadcast=hint and del_hint,
-                )
-            else:
-                # S5/S10: REPLACE-semantics upsert + guarded deletes S7,
-                # full-table rewrite (fine for small sinks; partitioned
-                # mode above prunes the rewrite at scale).
-                merged = merge_upsert(
-                    old, delta, spec.primary_key, hint_broadcast=hint
-                )
-                if apply_del:
-                    merged = merged.join(
-                        _maybe_broadcast(delete_keys.distinct(), del_hint),
-                        spec.primary_key,
-                        "anti",
-                    )
-                self.store.write(spec.name, merged)
-            dres = DeleteResult(
-                result=None, applied=apply_del, delete_count=n_deletes
-            )
 
-            # S9/S8: fingerprint rotation — overwrite with this run's
-            # source fingerprints (write-then-promote is atomic). After
-            # a rebase epoch the diff hashes covered only the common
-            # columns; the cache must rotate to the FULL new basis so
-            # the next epoch diffs normally.
-            if rebase:
-                self._write_fp(
-                    spec.name,
-                    fingerprint_table(
-                        source, spec.primary_key, data_cols, self.algo
-                    ),
+            # S9/S8: fingerprint rotation (write-then-promote is
+            # atomic). A snapshot replaces the cache with its own
+            # fingerprints; a delta feed upserts the changed keys'.
+            # After a rebase epoch the diff hashes covered only the
+            # common columns; the cache must rotate to the FULL new
+            # basis so the next epoch diffs normally.
+            if delta_feed:
+                new_fp = merge_upsert(
+                    rep_fp,
+                    parts.upserts.withColumnRenamed("new_hash", "hashed"),
+                    "id",
+                    hint_broadcast=hint,
                 )
+            elif rebase:
+                new_fp = fingerprint_table(source, pk, data_cols, self.algo)
             else:
-                self._write_fp(spec.name, src_fp)
+                new_fp = src_fp
+            self._write_fp(spec.name, new_fp)
             self._write_basis(spec.name, data_cols, src_types)
 
-            delta.unpersist()
             return UpdateStats(
                 table=spec.name,
                 bootstrap=False,
                 upserts=n_upserts,
-                updates=counts.get("update", 0),
-                deletes=dres.delete_count,
-                deletes_applied=dres.applied,
+                updates=counts.get(UPDATE, 0),
+                deletes=n_deletes,
+                deletes_applied=apply_del,
                 total_rows=self._read_main(spec.name).count(),
                 extra={"schema_change": evolution} if evolution else {},
             )
         finally:
             diff.unpersist()
+            if delta is not None:
+                delta.unpersist()
 
-    def _merge_evolved(
+    def _write_main(
         self,
         spec: TableSpec,
-        old: DataFrame,
         delta: DataFrame,
-        delete_keys: DataFrame,
-        apply_del: bool,
-        source: DataFrame,
-        evolution: dict,
+        deletes: DataFrame | None,
+        backfill: DataFrame | None,
+        boundary: bool,
         hint: bool,
         del_hint: bool,
-    ) -> DataFrame:
-        """Merge across a schema boundary: surviving old rows are
-        projected onto the delta's (new) schema — dropped columns go
-        away, added columns NULL-backfill — before the union, so the
-        replica's shape follows the source exactly as the reference's
-        does (its write set is re-read from ``information_schema``
-        every run, table.py:66-91).
-
-        With added columns the survivors' new values come from a
-        narrow ``(pk, added...)`` source projection joined onto the
-        kept rows: every row must gain the value, but only pk+added
-        travel through the join — at 100 TB that is a narrow-column
-        shuffle against the replica, not a full-width re-fetch. The
-        backfill is load-bearing under ``"rebase"`` (unchanged rows
-        stay on the kept path by design); under ``"full_churn"``
-        every surviving source row re-arrives through the delta
-        (``snapshot_diff(assume_changed=True)`` — cross-basis hash
-        coincidences are never trusted), so kept holds only
-        guard-skipped replica-only rows, which are not in the source
-        and correctly read NULL from the left join."""
-        pk = spec.primary_key
-        kept = old.join(
-            _maybe_broadcast(delta.select(pk).distinct(), hint), pk, "anti"
-        )
-        if apply_del:
-            kept = kept.join(
-                _maybe_broadcast(delete_keys.distinct(), del_hint), pk, "anti"
-            )
-        added = [c for c in evolution["added"] if c not in old.columns]
-        if added:
-            kept = kept.join(source.select(pk, *added), pk, "left")
-        kept = align_to_schema(kept, delta.schema)
-        return kept.unionByName(delta)
-
-    def _write_incremental_partitioned(
-        self,
-        spec: TableSpec,
-        old: DataFrame,
-        delta: DataFrame,
-        delete_keys: DataFrame,
-        apply_del: bool = True,
-        hint_broadcast: bool = True,
     ) -> None:
-        """Rewrite only the hash buckets containing changed/deleted
-        keys (dynamic partition overwrite).
+        """Merge the epoch into the replica and write it.
 
-        New content for an affected bucket = its old rows minus
-        upserted/deleted keys, plus the delta rows landing there; all
-        other buckets' files are untouched on disk (verified in
-        tests/test_partitioned_cdc.py via file mtimes)."""
+        The merge is REPLACE-semantics upsert (S5/S10) plus the applied
+        deletes (S7): old rows minus upserted and deleted keys, joined
+        with ``backfill`` (pk + added columns) if any, projected onto
+        the delta's schema — at a boundary dropped columns go away and
+        added ones NULL-backfill, so the replica's shape follows the
+        source exactly as the reference's does (its write set is
+        re-read from ``information_schema`` every run,
+        table.py:66-91) — then unioned with the delta.
+
+        Unpartitioned, the whole table is rewritten. Partitioned, only
+        the affected buckets are: all of them at a schema boundary
+        (every surviving row changes shape — no pruning is possible),
+        else the buckets of the touched keys; all other buckets' files
+        stay untouched on disk (tests/test_partitioned_cdc.py checks
+        mtimes). Dynamic overwrite never replaces a bucket that ends up
+        empty, so those are dropped explicitly."""
         pk = spec.primary_key
-        bucketed_old = self.store.read_partitioned(spec.name)
-        delta_b = delta.withColumn(self.BUCKET_COL, self._bucket_expr(pk))
 
-        touched_keys = delta.select(pk)
-        if apply_del:
-            touched_keys = touched_keys.unionByName(delete_keys.select(pk))
-        affected = [
-            r[0]
-            for r in touched_keys.select(
-                self._bucket_expr(pk).alias("b")
-            ).distinct().collect()
-        ]
-        if not affected:
+        def merge(old: DataFrame) -> DataFrame:
+            kept = old.join(
+                _maybe_broadcast(delta.select(pk).distinct(), hint), pk, "anti"
+            )
+            if deletes is not None:
+                kept = kept.join(
+                    _maybe_broadcast(deletes.distinct(), del_hint), pk, "anti"
+                )
+            if backfill is not None:
+                # every kept row must gain the added columns' values,
+                # but only pk+added travel through the join — at 100 TB
+                # a narrow-column shuffle, not a full-width re-fetch.
+                # Load-bearing under "rebase" (unchanged rows stay on
+                # the kept path by design); under "full_churn" every
+                # surviving source row re-arrives through the delta, so
+                # kept holds only guard-skipped replica-only rows, which
+                # correctly read NULL from the left join.
+                kept = kept.join(backfill, pk, "left")
+            return align_to_schema(kept, delta.schema).unionByName(delta)
+
+        if not self.partition_buckets:
+            self.store.write(spec.name, merge(self._read_main(spec.name)))
             return
-        kept = bucketed_old.filter(
-            F.col(self.BUCKET_COL).isin(affected)
-        ).join(
-            # touched = upserts + deletes; the caller gates the hint
-            # on both measured diff counts (VERDICT r5 #4)
-            _maybe_broadcast(touched_keys.distinct(), hint_broadcast),
-            pk,
-            "anti",
+
+        old = self.store.read_partitioned(spec.name)
+        affected = range(self.partition_buckets)
+        if not boundary:
+            touched = delta.select(pk)
+            if deletes is not None:
+                touched = touched.unionByName(deletes.select(pk))
+            affected = [
+                r[0]
+                for r in touched.select(self._bucket_expr(pk))
+                .distinct()
+                .collect()
+            ]
+            old = old.filter(F.col(self.BUCKET_COL).isin(affected))
+        merged = merge(old.drop(self.BUCKET_COL)).withColumn(
+            self.BUCKET_COL, self._bucket_expr(pk)
         )
-        new_content = kept.unionByName(
-            delta_b.select(*kept.columns)
-        )
-        self.store.overwrite_partitions(spec.name, new_content, self.BUCKET_COL)
+        # Only a delete can empty a bucket. The census runs BEFORE the
+        # write: the plan re-executes for it and the old files must
+        # still exist. Dynamic overwrite (NOT a static one, which
+        # deletes the root before the merged plan scans it) stages the
+        # new files and swaps partitions only at commit.
+        present = affected
+        if deletes is not None:
+            present = {
+                r[0] for r in merged.select(self.BUCKET_COL).distinct().collect()
+            }
+        self.store.overwrite_partitions(spec.name, merged, self.BUCKET_COL)
+        emptied = [b for b in affected if b not in present]
+        if emptied:
+            self.store.drop_partitions(spec.name, self.BUCKET_COL, emptied)
 
     # -- concurrent per-table updates (start.py:55-59) -----------------
     def update_many(
@@ -929,81 +902,6 @@ class CdcEngine:
             TRIBE, was_bootstrap=stats["tribe"].bootstrap, stat_cols=stat_cols
         )
         return stats
-
-    # -- streaming delta-apply (micro-batch mode) ----------------------
-    def apply_delta(self, spec: TableSpec, batch: DataFrame) -> UpdateStats:
-        """Apply a micro-batch containing only *arriving* rows (a delta
-        feed, e.g. a Structured Streaming file source), as opposed to
-        ``update`` whose input is a full snapshot.
-
-        Semantics: upsert every arriving key whose fingerprint differs
-        from the cache (unchanged re-deliveries are dropped — the same
-        skip the reference's hash compare gives, download.py:189-205);
-        never delete. Deletes in a delta feed must be explicit (tomb-
-        stone rows), which the reference has no notion of.
-        """
-        if not self._fp_exists(spec.name):
-            return self.bootstrap(spec, batch)
-
-        cols = classify_df(spec, batch) if spec.has_scores else None
-        data_cols = cols.data_columns if cols else list(batch.columns)
-
-        stored_basis = self._read_basis(spec.name)
-        if stored_basis is not None and stored_basis != data_cols:
-            # a delta feed carries only ARRIVING rows — there is no
-            # full snapshot to backfill added columns or re-base
-            # dropped ones from, so the boundary epoch must come
-            # through update(); fail loudly instead of unionByName
-            raise ValueError(
-                f"schema change in delta feed for {spec.name!r} "
-                f"(basis {stored_basis} -> {data_cols}); run a "
-                "full-snapshot update() for the boundary epoch"
-            )
-
-        batch_fp = fingerprint_table(batch, spec.primary_key, data_cols, self.algo)
-        rep_fp = self._read_fp(spec.name)
-        diff = snapshot_diff(batch_fp, rep_fp)
-        # replica-only keys are NOT deletes here — they simply didn't
-        # arrive in this batch.
-        changed = diff.filter(
-            F.col("change_type").isin("insert", "update")
-        ).select("id", "new_hash")
-
-        delta = self._computed(
-            spec,
-            semi_join_fetch(
-                batch.select(*data_cols),
-                changed.withColumnRenamed("id", spec.primary_key),
-                spec.primary_key,
-            ),
-        )
-        old = self._read_main(spec.name)
-        preimages = changelog_preimages(
-            old,
-            diff.filter(F.col("change_type") == "update").withColumnRenamed(
-                "id", spec.primary_key
-            ),
-            spec.primary_key,
-        )
-        self._append_changelog(spec.name, preimages)
-        if self.partition_buckets:
-            empty_deletes = delta.select(spec.primary_key).limit(0)
-            self._write_incremental_partitioned(spec, old, delta, empty_deletes)
-        else:
-            self.store.write(spec.name, merge_upsert(old, delta, spec.primary_key))
-        self.store.write(
-            f"{spec.name}__delta", delta
-        )
-        new_fp = merge_upsert(
-            rep_fp, changed.withColumnRenamed("new_hash", "hashed"), "id"
-        )
-        self._write_fp(spec.name, new_fp)
-        return UpdateStats(
-            table=spec.name,
-            bootstrap=False,
-            upserts=delta.count(),
-            total_rows=self._read_main(spec.name).count(),
-        )
 
     # -- entry point C: derived aggregates (post_update.py) ------------
     def post_update(

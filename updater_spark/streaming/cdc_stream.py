@@ -4,9 +4,11 @@ The reference is a periodically-run batch job (one ``docker run`` per
 cycle, /root/reference/Dockerfile:15, start.py:73-83); its "streaming"
 is intra-job asyncio pipelining. The idiomatic Spark re-expression
 (SURVEY.md §2.6, BASELINE.json north star) is Structured Streaming
-with ``foreachBatch``: each arriving source snapshot triggers one
-micro-batch that runs the full diff → fetch → merge → changelog →
-fingerprint-rotation transaction via ``CdcEngine.update``. State
+with ``foreachBatch``: each arriving file drop triggers one
+micro-batch that runs the diff → fetch → changelog → merge →
+fingerprint-rotation epoch via ``CdcEngine.apply_delta`` — the same
+sequence as ``CdcEngine.update``, over a delta feed (arriving rows
+upsert; nothing is deleted). State
 between triggers lives in the TableStore (storage, not operator
 state) — exactly how Spark wants externally-checkpointed incremental
 jobs structured.
@@ -36,13 +38,13 @@ def run_cdc_stream(
     processing_time: str = "60 seconds",
     max_files_per_trigger: int = 10000,
 ):
-    """Watch ``source_dir`` for snapshot parquet drops; run one CDC
-    update per micro-batch. Returns the StreamingQuery.
+    """Watch ``source_dir`` for parquet drops of arriving rows; run one
+    ``apply_delta`` epoch per micro-batch. Returns the StreamingQuery.
 
-    Each dropped file-set is ONE source snapshot: the file-source
-    micro-batch delivers the new rows, and ``foreachBatch`` runs the
-    batch CDC cycle against it — per-trigger transactionality comes
-    from the TableStore's atomic version promotion.
+    The file-source micro-batch delivers the new rows, and
+    ``foreachBatch`` runs the batch CDC epoch against them as a delta
+    feed — per-trigger transactionality comes from the TableStore's
+    atomic version promotion.
 
     ``max_files_per_trigger`` is the backpressure knob — the
     Structured-Streaming twin of the reference's bounded-queue
