@@ -273,3 +273,54 @@ def test_changelog_auto_compaction_policy(spark, tmp_store):
     files = [f for f in os.listdir(d) if f.endswith(".parquet")]
     assert len(files) == 1  # epoch-4 compaction just collapsed everything
     assert engine.changelog("t2").count() == 40  # lossless (no retention set)
+
+
+def test_fingerprints_rotate_from_the_diff_not_a_rescan(
+    spark, tmp_store, tmp_path, monkeypatch
+):
+    """A source that changes between two of its scans (a JDBC query
+    re-runs on each) must not lose the change. The fingerprint cache
+    records the hashes the diff compared, so a row that changed after
+    the diff is still seen as changed by the next epoch; a cache built
+    from a second scan would hold the new hash while the replica holds
+    the old row, and that row would never be fetched."""
+    from updater_spark.schema import TableSpec
+
+    flag = tmp_path / "flag"
+    flag.write_text("0")
+    path = str(flag)
+
+    @F.udf("long")
+    def live_v(i):
+        if i != 1:
+            return 0
+        with open(path) as f:
+            return int(f.read())
+
+    live_v = live_v.asNondeterministic()
+    spec = TableSpec("t", "id", has_scores=False)
+    engine = CdcEngine(tmp_store)
+    zero = F.lit(0).cast("long")
+    engine.update(spec, spark.range(20).select("id", zero.alias("v"), zero.alias("w")))
+    # id 1's v follows the flag; id 2 changes, so the epoch writes the replica
+    live = spark.range(20).select(
+        "id",
+        live_v("id").alias("v"),
+        F.when(F.col("id") == 2, 1).otherwise(0).cast("long").alias("w"),
+    )
+    real = CdcEngine._write_main
+
+    def flip_then_write(self, *args, **kwargs):
+        flag.write_text("1")
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(CdcEngine, "_write_main", flip_then_write)
+    stats = engine.update(spec, live)
+    assert (stats.upserts, stats.updates) == (1, 1)  # id 2: the diff saw v=0 for id 1
+    monkeypatch.setattr(CdcEngine, "_write_main", real)
+
+    stats = engine.update(spec, live)
+    assert (stats.upserts, stats.updates) == (1, 1)
+    assert sorted(tuple(r) for r in tmp_store.read("t").collect()) == sorted(
+        tuple(r) for r in live.collect()
+    )

@@ -36,7 +36,11 @@ def _maybe_broadcast(keys: DataFrame, hint: bool) -> DataFrame:
     (the source side then never shuffles). Callers that KNOW the key
     set is huge (the engine has exact diff counts) pass ``hint=False``
     and let AQE pick a shuffle join — a hard broadcast of 10^8 keys
-    would eat driver/executor memory for no win."""
+    would eat driver/executor memory for no win.
+
+    Key sets are never de-duplicated first: they only feed semi and
+    anti joins, which emit each left row at most once whatever the
+    right side holds, so a ``distinct()`` would only add a shuffle."""
     return F.broadcast(keys) if hint else keys
 
 
@@ -51,7 +55,7 @@ def semi_join_fetch(
     it broadcasts — the source scan then never shuffles.
     """
     return source.join(
-        _maybe_broadcast(keys.select(key).distinct(), hint_broadcast),
+        _maybe_broadcast(keys.select(key), hint_broadcast),
         on=key,
         how="semi",
     )
@@ -68,7 +72,7 @@ def merge_upsert(
     ``MERGE INTO t USING d ON t.pk = d.pk WHEN MATCHED THEN UPDATE *
     WHEN NOT MATCHED THEN INSERT *``.
     """
-    keys = _maybe_broadcast(delta.select(key).distinct(), hint_broadcast)
+    keys = _maybe_broadcast(delta.select(key), hint_broadcast)
     kept = target.join(keys, on=key, how="anti")
     return kept.unionByName(delta)
 
@@ -98,9 +102,7 @@ def apply_deletes(
     # guard past BROADCAST_KEY_LIMIT must not turn the safety valve
     # into a driver-OOM broadcast (VERDICT r5 #4)
     kept = target.join(
-        _maybe_broadcast(
-            delete_keys.select(key).distinct(), n < BROADCAST_KEY_LIMIT
-        ),
+        _maybe_broadcast(delete_keys.select(key), n < BROADCAST_KEY_LIMIT),
         key,
         "anti",
     )
@@ -207,7 +209,7 @@ def changelog_preimages(
     INNER JOIN against the old table drops them; the semi join here
     does the same."""
     return old_table.join(
-        _maybe_broadcast(updated_keys.select(key).distinct(), hint_broadcast),
+        _maybe_broadcast(updated_keys.select(key), hint_broadcast),
         on=key,
         how="semi",
     )

@@ -27,7 +27,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from updater_spark.functions.fingerprints import fingerprint_table, row_fingerprint
@@ -87,7 +87,9 @@ class CdcEngine:
     ``__delta`` + ``__deleted`` are the full per-epoch change feed a
     downstream consumer (e.g. the incremental dedup index,
     operators/dedup_index.py::apply_cdc_epoch) needs to mirror the
-    table.
+    table. A bootstrap's ``__delta`` is the whole table: unpartitioned,
+    its files are hard links to the main table's (``TableStore.link``),
+    so the two share bytes rather than holding two copies.
     """
 
     BUCKET_COL = "_bucket"
@@ -449,7 +451,7 @@ class CdcEngine:
                 self.BUCKET_COL,
             )
         else:
-            self.store.write(spec.name, full.drop("_fp"))
+            total = self._write_counted(spec.name, full.drop("_fp"))
         self._write_fp(
             spec.name,
             full.select(
@@ -460,12 +462,15 @@ class CdcEngine:
             spec.name, data_cols, self._basis_types(source, data_cols)
         )
         self._append_basis_history(spec.name, 0, data_cols)
-        total = self._read_main(spec.name).count()
         # Bootstrap writes straight to the main table; the delta equals
         # the full table (download.py:494 "" if table.is_empty).
-        self.store.write(f"{spec.name}__delta", self._read_main(spec.name))
-        self.store.write(
-            f"{spec.name}__deleted", source.select(spec.primary_key).limit(0)
+        if self.partition_buckets:
+            total = self._read_main(spec.name).count()
+            self.store.write(f"{spec.name}__delta", self._read_main(spec.name))
+        else:
+            self.store.link(f"{spec.name}__delta", spec.name)
+        self.store.write_empty(
+            f"{spec.name}__deleted", source.select(spec.primary_key).schema
         )
         return UpdateStats(
             table=spec.name, bootstrap=True, upserts=total, total_rows=total
@@ -621,8 +626,9 @@ class CdcEngine:
                 )
         src_fp = fingerprint_table(source, pk, basis, self.algo)
 
-        # J1: the diff join. Materialized once (small output: changed
-        # keys only) so the consumers don't re-run the join.
+        # J1: the diff join. Materialized once (every key's class and
+        # source hash) so the consumers and the fingerprint rotation
+        # don't re-run the join or re-scan the source.
         # At a full-churn schema boundary the cached hashes were
         # rendered over a DIFFERENT basis than src_fp — cross-basis
         # hash equality is a meaningless coincidence ('1x' from [name]
@@ -693,7 +699,7 @@ class CdcEngine:
                 preimages = preimages.withColumn(self.CT_COL, F.lit("update"))
                 if applied is not None:
                     del_pre = old.join(
-                        _maybe_broadcast(applied.distinct(), del_hint),
+                        _maybe_broadcast(applied, del_hint),
                         pk,
                         "semi",
                     ).withColumn(self.CT_COL, F.lit("delete"))
@@ -720,17 +726,20 @@ class CdcEngine:
             # the epoch's applied delete keys — empty when the guard
             # tripped or nothing was deleted, so consumers never act
             # on skipped deletes
-            self.store.write(
-                f"{spec.name}__deleted",
-                applied if applied is not None else delete_keys.limit(0),
-            )
+            if applied is not None:
+                self.store.write(f"{spec.name}__deleted", applied)
+            else:
+                self.store.write_empty(
+                    f"{spec.name}__deleted", delete_keys.schema
+                )
+            total = None
             if evolution or n_upserts or applied is not None:
                 added = (
                     [c for c in evolution["added"] if c not in old.columns]
                     if evolution
                     else []
                 )
-                self._write_main(
+                total = self._write_main(
                     spec,
                     delta,
                     applied,
@@ -741,11 +750,15 @@ class CdcEngine:
                 )
 
             # S9/S8: fingerprint rotation (write-then-promote is
-            # atomic). A snapshot replaces the cache with its own
-            # fingerprints; a delta feed upserts the changed keys'.
-            # After a rebase epoch the diff hashes covered only the
-            # common columns; the cache must rotate to the FULL new
-            # basis so the next epoch diffs normally.
+            # atomic). A snapshot replaces the cache with the source
+            # hashes the diff saw — taken from the persisted diff, not
+            # a second source scan: a source that changes between two
+            # scans (a JDBC query) would otherwise cache a hash whose
+            # row was never fetched, and that row would never be
+            # fetched later either. A delta feed upserts the changed
+            # keys' hashes. After a rebase epoch the diff hashes
+            # covered only the common columns; the cache must rotate to
+            # the FULL new basis so the next epoch diffs normally.
             if delta_feed:
                 new_fp = merge_upsert(
                     rep_fp,
@@ -756,7 +769,9 @@ class CdcEngine:
             elif rebase:
                 new_fp = fingerprint_table(source, pk, data_cols, self.algo)
             else:
-                new_fp = src_fp
+                new_fp = diff.filter(F.col("change_type") != DELETE).select(
+                    "id", F.col("new_hash").alias("hashed")
+                )
             self._write_fp(spec.name, new_fp)
             self._write_basis(spec.name, data_cols, src_types)
 
@@ -767,7 +782,13 @@ class CdcEngine:
                 updates=counts.get(UPDATE, 0),
                 deletes=n_deletes,
                 deletes_applied=apply_del,
-                total_rows=self._read_main(spec.name).count(),
+                # observed by the main write; counted only when there
+                # was none or it was partitioned
+                total_rows=(
+                    total
+                    if total is not None
+                    else self._read_main(spec.name).count()
+                ),
                 extra={"schema_change": evolution} if evolution else {},
             )
         finally:
@@ -784,8 +805,10 @@ class CdcEngine:
         boundary: bool,
         hint: bool,
         del_hint: bool,
-    ) -> None:
-        """Merge the epoch into the replica and write it.
+    ) -> int | None:
+        """Merge the epoch into the replica and write it; returns the
+        replica's row count when the write observed it (unpartitioned),
+        else None.
 
         The merge is REPLACE-semantics upsert (S5/S10) plus the applied
         deletes (S7): old rows minus upserted and deleted keys, joined
@@ -806,13 +829,9 @@ class CdcEngine:
         pk = spec.primary_key
 
         def merge(old: DataFrame) -> DataFrame:
-            kept = old.join(
-                _maybe_broadcast(delta.select(pk).distinct(), hint), pk, "anti"
-            )
+            kept = old.join(_maybe_broadcast(delta.select(pk), hint), pk, "anti")
             if deletes is not None:
-                kept = kept.join(
-                    _maybe_broadcast(deletes.distinct(), del_hint), pk, "anti"
-                )
+                kept = kept.join(_maybe_broadcast(deletes, del_hint), pk, "anti")
             if backfill is not None:
                 # every kept row must gain the added columns' values,
                 # but only pk+added travel through the join — at 100 TB
@@ -826,8 +845,7 @@ class CdcEngine:
             return align_to_schema(kept, delta.schema).unionByName(delta)
 
         if not self.partition_buckets:
-            self.store.write(spec.name, merge(self._read_main(spec.name)))
-            return
+            return self._write_counted(spec.name, merge(self._read_main(spec.name)))
 
         old = self.store.read_partitioned(spec.name)
         affected = range(self.partition_buckets)
@@ -859,6 +877,15 @@ class CdcEngine:
         emptied = [b for b in affected if b not in present]
         if emptied:
             self.store.drop_partitions(spec.name, self.BUCKET_COL, emptied)
+        return None
+
+    def _write_counted(self, name: str, df: DataFrame) -> int:
+        """Write ``df`` as the table's new version and return its row
+        count, observed by the write job itself instead of a count()
+        job over the written files."""
+        obs = Observation()
+        self.store.write(name, df.observe(obs, F.count(F.lit(1)).alias("n")))
+        return obs.get["n"]
 
     # -- concurrent per-table updates (start.py:55-59) -----------------
     def update_many(
@@ -929,8 +956,11 @@ class CdcEngine:
                 ]
 
         if not was_bootstrap:
-            active = tribe_active(tribe, member, player_new)
-            self.store.write("tribe_active", active)
+            self.store.write("tribe_active", tribe_active(tribe, member, player_new))
+            # read back what was just written (no job: the version is
+            # self-describing) rather than re-join tribe, member and
+            # player__delta inside tribe_stats
+            active = self.store.read("tribe_active")
             stats = tribe_stats(active, member, player, stat_cols, bootstrap=False)
         else:
             stats = tribe_stats(

@@ -9,6 +9,18 @@ that: every write lands in a fresh ``v{N}`` directory and a tiny
 Readers always resolve ``_CURRENT`` first, so a crashed writer leaves
 the previous version intact (same crash-safety contract, any table).
 
+Versions are self-describing: each ``v{N}`` directory holds a
+``_SCHEMA`` file (the Spark schema as JSON) written before the pointer
+moves, so ``read`` hands Spark the schema instead of letting it infer
+one — inference runs a Spark job per read to re-learn a schema this
+store wrote itself. A version is immutable, so the file never goes
+stale; Spark and pyarrow both skip ``_``-prefixed files. Versions
+without it (written before it existed, or with ``partition_by``) are
+read by inference. Two kinds of version need no Spark job to write:
+``write_empty`` (schema only, zero rows) and ``link`` (hard links to
+another table's current files — a second name for the same bytes,
+which outlives the source version's garbage collection).
+
 In production this store is exactly what Delta/Iceberg provide
 (atomic commit log + snapshots); the engine's operators are pure
 DataFrame functions, so swapping this class for ``spark.table`` /
@@ -65,12 +77,16 @@ lock generalized (optimistic CAS on a log), see SURVEY §7.2.
 from __future__ import annotations
 
 import contextlib
+import json
 import os
 import shutil
 import socket
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+SCHEMA_FILE = "_SCHEMA"
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -286,16 +302,23 @@ class TableStore:
     def read(self, name: str, version: int | None = None) -> DataFrame:
         """Read the current version, or time-travel to an older kept
         version (``version=N`` reads ``v{N}``; the store keeps the last
-        2 by default — the double-buffer window)."""
+        2 by default — the double-buffer window). A version with a
+        ``_SCHEMA`` file is read with that schema: no Spark job."""
         if version is not None:
             path = os.path.join(self._dir(name), f"v{version}")
             if not os.path.exists(path):
                 raise FileNotFoundError(f"table {name!r} has no version v{version}")
-            return self.spark.read.parquet(path)
-        path = self.current_path(name)
-        if path is None:
-            raise FileNotFoundError(f"table {name!r} has no current version")
-        return self.spark.read.parquet(path)
+        else:
+            path = self.current_path(name)
+            if path is None:
+                raise FileNotFoundError(f"table {name!r} has no current version")
+        reader = self.spark.read
+        try:
+            with open(os.path.join(path, SCHEMA_FILE)) as f:
+                reader = reader.schema(StructType.fromJson(json.load(f)))
+        except FileNotFoundError:
+            pass  # legacy or partitioned version: infer
+        return reader.parquet(path)
 
     def versions(self, name: str) -> list[int]:
         d = self._dir(name)
@@ -305,6 +328,30 @@ class TableStore:
             int(v[1:]) for v in os.listdir(d) if v.startswith("v") and v[1:].isdigit()
         )
 
+    @contextlib.contextmanager
+    def _new_version(self, name: str):
+        """The one version sequence every versioned write goes
+        through: under the table's writer lock, pick ``v{N}``, let the
+        caller fill the yielded directory, then atomically promote the
+        pointer and garbage-collect (the reference's hash-cache
+        rotation, download.py:572-581). A fill that raises leaves the
+        pointer on the previous version."""
+        with self._write_lock(name):
+            d = self._dir(name)
+            versions = [v for v in os.listdir(d) if v.startswith("v")]
+            next_v = f"v{max([int(v[1:]) for v in versions], default=-1) + 1}"
+            yield os.path.join(d, next_v)
+            tmp = self._pointer(name) + ".tmp"
+            with open(tmp, "w") as f:
+                f.write(next_v)
+            os.replace(tmp, self._pointer(name))  # atomic on POSIX
+            self._gc(name, keep=2)
+
+    @staticmethod
+    def _write_schema(path: str, schema: StructType) -> None:
+        with open(os.path.join(path, SCHEMA_FILE), "w") as f:
+            f.write(schema.json())
+
     def write(
         self,
         name: str,
@@ -312,8 +359,8 @@ class TableStore:
         partition_by: list[str] | None = None,
         num_files: int | None = None,
     ) -> str:
-        """Write a new version, then atomically promote the pointer
-        (the reference's hash-cache rotation, download.py:572-581).
+        """Write a new version and its ``_SCHEMA``, then atomically
+        promote the pointer.
 
         ``num_files`` controls output file count for small sink tables
         (avoid thousands of tiny files at local scale; at cluster
@@ -322,24 +369,55 @@ class TableStore:
         Holds the table's writer lock for the whole version-pick →
         write → promote sequence (single-writer contract; a racing
         writer gets ``ConcurrentWriteError``, never a corrupted
-        ``_CURRENT``).
+        ``_CURRENT``). A ``partition_by`` version carries no
+        ``_SCHEMA`` — a read moves partition columns last, so it is
+        read by inference.
         """
-        with self._write_lock(name):
-            d = self._dir(name)
-            versions = [v for v in os.listdir(d) if v.startswith("v")]
-            next_v = f"v{max([int(v[1:]) for v in versions], default=-1) + 1}"
-            path = os.path.join(d, next_v)
+        with self._new_version(name) as path:
             writer = df.coalesce(num_files) if num_files else df
             w = writer.write.mode("overwrite")
             if partition_by:
                 w = w.partitionBy(*partition_by)
             w.parquet(path)
-            tmp = self._pointer(name) + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(next_v)
-            os.replace(tmp, self._pointer(name))  # atomic on POSIX
-            self._gc(name, keep=2)
-            return path
+            if not partition_by:
+                self._write_schema(path, df.schema)
+        return path
+
+    def write_empty(self, name: str, schema: StructType) -> str:
+        """Write a zero-row version of ``schema`` without a Spark job:
+        one row-group-free parquet file (so pyarrow readers see the
+        columns too) plus its ``_SCHEMA``."""
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        with self._new_version(name) as path:
+            os.makedirs(path)
+            pq.write_table(
+                to_arrow_schema(schema).empty_table(),
+                os.path.join(path, "part-00000.parquet"),
+            )
+            self._write_schema(path, schema)
+        return path
+
+    def link(self, name: str, source: str) -> str:
+        """Write a version of ``name`` whose files are hard links to
+        ``source``'s current version — the same rows at the cost of a
+        directory listing, no Spark job and no bytes copied. Versions
+        are immutable, so sharing files is safe, and a hard link keeps
+        the bytes alive after ``source``'s garbage collection removes
+        the version they came from. ``source``'s lock is held so that
+        version cannot be collected mid-link."""
+        with self.locked(source):
+            src = self.current_path(source)
+            if src is None:
+                raise FileNotFoundError(f"table {source!r} has no current version")
+            with self._new_version(name) as path:
+                for root, _, files in os.walk(src):
+                    out = os.path.join(path, os.path.relpath(root, src))
+                    os.makedirs(out, exist_ok=True)
+                    for f in files:
+                        os.link(os.path.join(root, f), os.path.join(out, f))
+        return path
 
     def write_clustered(
         self,
