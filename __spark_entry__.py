@@ -1854,12 +1854,9 @@ def _cdc_dedup_epochs(
     # pair misses ALL bands with p = (1-0.75^4)^16 ~= 0.23% — the
     # sf0.001 corpus hits exactly that event on (150, 100150),
     # failing the oracle there on the r11 tree too. At 32 x 2 the
-    # miss probability is (1-0.75^2)^32 ~= 3e-12 and every true pair
-    # at every shipped SF is found (verified exhaustively vs the
-    # exact oracle at sf0.001/0.01/0.1); candidates are a superset
-    # of the 16-band ones, and the exact-jaccard verify keeps the
-    # output equal to the oracle set, so the sf0.01/sf0.1 results
-    # are byte-identical to r11's.
+    # miss probability is (1-0.75^2)^32 ~= 3e-12; the exact-jaccard
+    # verify keeps only true pairs, and the output is oracle-equal at
+    # sf0.001, sf0.01 and sf0.1.
     idx = DedupIndex(store, "docsidx", bands=32)
 
     epoch_pairs = []
@@ -3085,8 +3082,8 @@ def _drained_rollup_state(spark: SparkSession, sf_dir: str) -> str:
     turned into dozens of micro-batches, each paying a state
     read+overwrite), then three AvailableNow micro-batches fold them
     into the stored state with partition-pruned day overwrites.
-    Returns the state's parquet directory; /tmp lifecycle owns
-    cleanup (matches q_streaming_cdc)."""
+    Returns the state's table directory (all its versions); /tmp
+    lifecycle owns cleanup (matches q_streaming_cdc)."""
     import tempfile
 
     from updater_spark.sources.store import TableStore
@@ -3118,7 +3115,7 @@ def _drained_rollup_state(spark: SparkSession, sf_dir: str) -> str:
             max_files_per_trigger=1,
         )
         q.awaitTermination()
-    path = store._ppath("ev_rollup")
+    path = store._dir("ev_rollup")
     _ROLLUP_STATE_CACHE[sf_dir] = path
     return path
 
@@ -3134,8 +3131,11 @@ def q_streaming_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     land on the identical state. The drained state is built once per
     process (_drained_rollup_state) and shared with
     rollup_cdc_repair's bootstrap."""
+    from updater_spark.sources.store import TableStore
+
     state = _drained_rollup_state(spark, sf_dir)
-    return spark.read.parquet(state).select(
+    store = TableStore(spark, os.path.dirname(state))
+    return store.read(os.path.basename(state)).select(
         F.unix_micros("bucket_ts").alias("bucket_ts"),
         "event_type",
         "n",
@@ -3699,7 +3699,7 @@ def q_tribe_stats_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
             store, "tstats", tribe, member, player2,
             ["stat_nat", "stat_len"], changed,
         )
-        return store.read_partitioned("tstats").select(
+        return store.read("tstats").select(
             "id",
             "members",
             F.round("stat_nat", 6).alias("stat_nat"),
@@ -3737,7 +3737,7 @@ def q_rollup_cdc_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
         # property): copied, not re-aggregated — one state build
         # serves both streaming fixtures per process.
         shutil.copytree(
-            _drained_rollup_state(spark, sf_dir), store._ppath("ev_rollup")
+            _drained_rollup_state(spark, sf_dir), store._dir("ev_rollup")
         )
 
         # mutations confined to the first week of each month: the
@@ -3760,7 +3760,7 @@ def q_rollup_cdc_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
         rollup_repair_days(
             store, "ev_rollup", replica, days, "ts", "value", ["event_type"]
         )
-        return store.read_partitioned("ev_rollup").select(
+        return store.read("ev_rollup").select(
             F.unix_micros("bucket_ts").alias("bucket_ts"),
             "event_type",
             "n",
@@ -3915,7 +3915,7 @@ def q_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         store = TableStore(spark, os.path.join(root, "store"))
         join_view_bootstrap(store, "cview", a0, b0, "nkey", buckets=16)
         join_view_repair(store, "cview", a1, b1, "nkey", aff, buckets=16)
-        return store.read_partitioned("cview").select(
+        return store.read("cview").select(
             "c_custkey", "nkey", "c_name", "n_name"
         )
     except BaseException:

@@ -68,6 +68,10 @@ def _time_queries(spark, sf_dir, qs, warm_runs: int = 1):
         # per-query isolation: one broken query must never zero out the
         # whole round's numbers (r1 lesson — BENCH_r01 was null)
         try:
+            # from a clean cache, as cdcbench runs queries: no table an
+            # earlier query cached may serve this one's warm or timed
+            # passes
+            spark.catalog.clearCache()
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             t_build = time.perf_counter() - t0

@@ -1818,13 +1818,13 @@ def joinview_probe(n: int) -> None:
         # directory-pruned; the write cost is the CDC epoch's own
         # business, reported separately
         t0 = time.time()
-        store.write_partitioned(
+        store.write(
             f"fact_{e}",
             fact(e).withColumn(PART_COL, _bucket(F.col("j"), buckets)),
-            PART_COL,
+            partition_by=[PART_COL],
         )
         mat_sec = round(time.time() - t0, 3)
-        a_new, b_new = store.read_partitioned(f"fact_{e}"), dim(e)
+        a_new, b_new = store.read(f"fact_{e}"), dim(e)
         # the churn domain IS the hot slice (+ the dim rows this
         # epoch renamed) — pre- and post-image values both live there
         aff = spark.range(0, hot).select(F.col("id").alias("j")).unionByName(
@@ -1848,14 +1848,14 @@ def joinview_probe(n: int) -> None:
     join_view_bootstrap(
         store,
         "v_rebuild",
-        store.read_partitioned("fact_3").drop(PART_COL),
+        store.read("fact_3").drop(PART_COL),
         dim(3),
         "j",
         buckets=buckets,
     )
     res["full_rejoin_sec"] = round(time.time() - t0, 3)
-    res["view_rows"] = store.read_partitioned("v").count()
-    res["rebuild_rows"] = store.read_partitioned("v_rebuild").count()
+    res["view_rows"] = store.read("v").count()
+    res["rebuild_rows"] = store.read("v_rebuild").count()
     res["rows_match"] = res["view_rows"] == res["rebuild_rows"]
     mean_repair = sum(e["repair_sec"] for e in epochs) / len(epochs)
     res["crossover"] = round(res["full_rejoin_sec"] / mean_repair, 2)
@@ -3723,99 +3723,6 @@ def hybridchamp_probe(
     )
 
 
-def lshsurvival_probe(n: int, cluster: int = 150) -> None:
-    """A/B probe for ``lsh_candidate_pairs``' survival-bitmap pair
-    dedup (r12, VERDICT r11 #3) against the r11 ``distinct()`` shape
-    it replaced, on the corpus shape that decides the trade:
-
-    - ``cluster > 1``: every doc belongs to a near-dup cluster of
-      ``cluster`` members (39 of 40 tokens shared, J ≈ 0.95 → each
-      pair collides in most of the 16 bands). The distinct() shuffles
-      the FULL multi-band collision stream (≈ bands × J^rows_per_band
-      × cluster²/2 rows per cluster); the bitmap variant's extra
-      aggregates are linear in n × bands.
-    - ``cluster = 1``: fully flat buckets (the dedupchar corpus
-      shape) — the bitmap variant's worst case: it pays its linear
-      exchanges while distinct() had almost nothing to dedup.
-
-    Both variants run on the SAME corpus in one session (warm 1%
-    slice first), noop-sink timed, and the pair counts are asserted
-    equal. Usage: ``python bench_scale.py 2000000 lshsurvival 150``.
-    """
-    from updater_spark.operators.dedup import (
-        band_hashes,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
-
-    spark = get_spark("bench_scale_lshsurvival")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    base = spark.range(0, n, numPartitions=64).withColumnRenamed(
-        "id", "doc_id"
-    )
-    # 40 tokens; all but the last derive from the CLUSTER id, the
-    # last from the doc — J = 39/41 ≈ 0.95 within a cluster
-    cid = (F.col("doc_id") / F.lit(max(cluster, 1))).cast("long")
-    toks = [
-        F.concat(
-            F.lit("w"),
-            F.pmod(
-                F.xxhash64(cid if i < 39 else F.col("doc_id"), F.lit(i)),
-                F.lit(500_000),
-            ),
-        )
-        for i in range(40)
-    ]
-    docs = base.select("doc_id", F.concat_ws(" ", *toks).alias("text"))
-
-    def old_pairs(signatures, bands=16, max_bucket=200):
-        banded = band_hashes(signatures, bands)
-        grouped = banded.groupBy("band", "band_hash").agg(
-            F.collect_list("id").alias("ids")
-        )
-        bounded = grouped.filter(
-            (F.size("ids") > 1) & (F.size("ids") <= max_bucket)
-        )
-        return (
-            bounded.select("ids", F.explode("ids").alias("id_a"))
-            .select("id_a", F.explode("ids").alias("id_b"))
-            .filter(F.col("id_a") < F.col("id_b"))
-            .distinct()
-        )
-
-    # the candidate stage is what changed, so isolate it: signatures
-    # computed ONCE and persisted (exactly how the registered rows
-    # call it — q_dedup_minhash_lsh persists sigs, lsh_verified_pairs
-    # opts into persist_bands; without this the A/B mostly measures
-    # how many times each variant re-runs the signature aggregate)
-    sigs = minhash_signatures(docs, "doc_id", "text").persist()
-    sigs.write.format("noop").mode("overwrite").save()
-
-    report: dict = {"n_docs": n, "cluster": cluster}
-    counts = {}
-    for name, fn in (
-        ("distinct_r11", old_pairs),
-        ("bitmap_r12", lsh_candidate_pairs),
-    ):
-        warm_sigs = minhash_signatures(
-            docs.filter(F.col("doc_id") < max(n // 100, 1000)),
-            "doc_id",
-            "text",
-        )
-        fn(warm_sigs).write.format("noop").mode("overwrite").save()
-        spark.sparkContext.setJobDescription(f"lshsurvival {name}")
-        t0 = time.perf_counter()
-        out = fn(sigs)
-        out.write.format("noop").mode("overwrite").save()
-        wall = time.perf_counter() - t0
-        counts[name] = out.count()
-        report[name] = {"wall_sec": round(wall, 3), "n_pairs": counts[name]}
-        spark.sparkContext.setJobDescription(None)
-    report["pairs_equal"] = counts["distinct_r11"] == counts["bitmap_r12"]
-    print(json.dumps({"lshsurvival_probe": report}))
-
-
 def dedupchar_probe(n: int) -> None:
     """Char-unit near-dup at scale (the r10 CJK-honesty work's scale
     question): ``n`` SPACELESS ~100-char docs — one giant "word"
@@ -4432,10 +4339,6 @@ if __name__ == "__main__":
         )
     elif len(sys.argv) > 2 and sys.argv[2] == "dedupchar":
         dedupchar_probe(_n)
-    elif len(sys.argv) > 2 and sys.argv[2] == "lshsurvival":
-        lshsurvival_probe(
-            _n, int(sys.argv[3]) if len(sys.argv) > 3 else 150
-        )
     elif len(sys.argv) > 2 and sys.argv[2] == "unigram8k":
         unigram8k_probe(
             _n,

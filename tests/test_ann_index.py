@@ -68,7 +68,7 @@ def test_upsert_migrating_vector_leaves_old_cell(spark, corpus, tmp_store):
     idx.upsert(delta)
 
     current = df.filter("vec_id <> 7").unionByName(delta)
-    stored = tmp_store.read_partitioned("emb_mig__cells")
+    stored = tmp_store.read("emb_mig__cells")
     # no duplicate ids anywhere (stale copy gone), corpus size right
     assert stored.groupBy("vec_id").count().filter("count > 1").count() == 0
     assert stored.count() == current.count()
@@ -86,7 +86,7 @@ def test_remove_and_emptied_cell_dropped(spark, corpus, tmp_store):
     # tiny corpus: one cell likely holds exactly one vector
     small = df.filter("vec_id < 10")
     idx.bootstrap(small, cents)
-    stored = tmp_store.read_partitioned("emb_rm__cells")
+    stored = tmp_store.read("emb_rm__cells")
     one_cell = (
         stored.groupBy("bucket").count().filter("count = 1").head()
     )
@@ -102,7 +102,7 @@ def test_remove_and_emptied_cell_dropped(spark, corpus, tmp_store):
         [Row(vec_id=v) for v in victim_ids]
     )
     idx.remove(victims)
-    after = tmp_store.read_partitioned("emb_rm__cells")
+    after = tmp_store.read("emb_rm__cells")
     assert after.filter(F.col("bucket") == one_cell["bucket"]).count() == 0
     assert after.count() == 10 - 1
     # search parity vs one-shot over the shrunken corpus
@@ -163,7 +163,7 @@ def test_ivfpq_index_maintained_equals_fresh(spark, corpus, tmp_store):
         .unionByName(delta)
         .join(victims, "vec_id", "anti")
     )
-    stored = tmp_store.read_partitioned("pq__cells")
+    stored = tmp_store.read("pq__cells")
     assert stored.groupBy("vec_id").count().filter("count > 1").count() == 0
     assert stored.count() == current.count()
     assert set(stored.columns) == {"vec_id", "cell", "codes"}  # codes only

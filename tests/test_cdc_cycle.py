@@ -98,7 +98,7 @@ def test_bootstrap_then_incremental(spark, tmp_store, rng):
     assert src.select(*dcols).exceptAll(replica.select(*dcols)).count() == 0
 
     # changelog = S0 pre-images of updated rows only
-    changelog = tmp_store.read_appendable("player__changelog")
+    changelog = tmp_store.read("player__changelog")
     assert changelog.count() == 500
     assert {r["id"] for r in changelog.select("id").collect()} == set(updated_ids)
     # pre-image values are the OLD ones

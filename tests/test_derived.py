@@ -44,7 +44,7 @@ def frames(spark):
 def _state(store, table):
     return sorted(
         (r["id"], r["members"], round(r["stat_a"], 9), round(r["stat_b"], 9))
-        for r in store.read_partitioned(table).collect()
+        for r in store.read(table).collect()
     )
 
 
@@ -55,9 +55,15 @@ def _full(tribe, member, player):
     )
 
 
-def _bucket_mtimes(root):
+def _bucket_mtimes(store):
+    """Newest file mtime per bucket of the current version; a bucket
+    carried over from the parent is hard-linked, so its files keep
+    their mtime."""
+    root = store.current_path("tstats")
     return {
-        d: max(os.path.getmtime(f) for f in glob.glob(os.path.join(d, "*.parquet")))
+        os.path.basename(d): max(
+            os.path.getmtime(f) for f in glob.glob(os.path.join(d, "*.parquet"))
+        )
         for d in glob.glob(os.path.join(root, "_bucket=*"))
     }
 
@@ -67,8 +73,7 @@ def test_repair_equals_full_rebuild_and_prunes_buckets(spark, frames, tmp_path):
     store = TableStore(spark, str(tmp_path / "store"))
     stats_bootstrap(store, "tstats", tribe, member, player, STATS, buckets=8)
     assert _state(store, "tstats") == _full(tribe, member, player)
-    root = os.path.join(str(tmp_path / "store"), "tstats", "pdata")
-    before = _bucket_mtimes(root)
+    before = _bucket_mtimes(store)
     assert len(before) >= 4  # tribes spread over several buckets
 
     # mutate players of tribes 0 and 1 only
@@ -84,7 +89,7 @@ def test_repair_equals_full_rebuild_and_prunes_buckets(spark, frames, tmp_path):
     )
     assert _state(store, "tstats") == _full(tribe, member, player2)
 
-    after = _bucket_mtimes(root)
+    after = _bucket_mtimes(store)
     aff_buckets = {
         f"_bucket={r[0]}"
         for r in affected_group_ids(member, changed)
@@ -92,7 +97,7 @@ def test_repair_equals_full_rebuild_and_prunes_buckets(spark, frames, tmp_path):
         .distinct()
         .collect()
     }
-    untouched = {d for d in before if os.path.basename(d) not in aff_buckets}
+    untouched = {d for d in before if d not in aff_buckets}
     assert untouched and all(after[d] == before[d] for d in untouched)
 
 
@@ -116,7 +121,7 @@ def test_repair_drops_emptied_tribe(spark, frames, tmp_path):
         buckets=8,
         member_before=member,
     )
-    ids = {r["id"] for r in store.read_partitioned("tstats").collect()}
+    ids = {r["id"] for r in store.read("tstats").collect()}
     assert 3 not in ids
     assert _state(store, "tstats") == _full(tribe, member2, player2)
 

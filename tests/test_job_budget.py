@@ -4,20 +4,28 @@ Each count is the number of jobs submitted under one job group, read
 back with ``statusTracker().getJobIdsForGroup``. The budgets pin what
 the engine submits today: a store read of a self-describing version,
 an empty version and a linked version cost no job, and the post-write
-row count comes from the write itself. A change that adds a job to one
+row count comes from the write itself. A partition rewrite submits no
+census of the partitions it left empty: they are simply absent from
+the new version. A change that adds a job to one
 of these paths fails here first; lower a budget when a change removes
 one.
 """
 
 import itertools
+import os
 
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from updater_spark.operators.joinview import (
+    affected_join_values,
+    join_view_bootstrap,
+    join_view_repair,
+)
 from updater_spark.plans.cdc import CdcEngine
-from updater_spark.schema import MEMBER, PLAYER, TRIBE
+from updater_spark.schema import MEMBER, PLAYER, TRIBE, TableSpec
 from updater_spark.sources.store import TableStore
 
 from test_cdc_cycle import make_players
@@ -102,3 +110,60 @@ def test_store_versions_cost_no_job(spark, tmp_path):
     assert n == 0
     assert store.read("e").count() == 0
     assert sorted(r.id for r in store.read("l").collect()) == list(range(5))
+
+
+def test_partitioned_update_job_budget(spark, tmp_path):
+    engine = CdcEngine(
+        TableStore(spark, str(tmp_path / "store")), partition_buckets=64
+    )
+    spec = TableSpec("items", "id")
+    s0 = spark.createDataFrame([Row(id=i, v=i) for i in range(1, 11)])
+    engine.update(spec, s0)
+    buckets = len(os.listdir(engine.store.current_path("items")))
+    stats, n = jobs(spark, lambda: engine.update(spec, s0.filter("id < 10")))
+    assert (stats.deletes, stats.total_rows) == (1, 9)
+    # the delete emptied its bucket
+    assert len(os.listdir(engine.store.current_path("items"))) == buckets - 1
+    # the epoch's jobs plus the touched-bucket list and the post-write
+    # count; no census of the buckets the delete emptied
+    assert n == 19
+
+
+def test_join_view_repair_job_budget(spark, tmp_path):
+    store = TableStore(spark, str(tmp_path / "store"))
+    a0 = spark.createDataFrame(
+        [Row(pk=p, j=j, av=f"a{p}") for p, j in [(1, 10), (2, 10), (3, 20), (4, 30)]]
+    )
+    b0 = spark.createDataFrame([Row(bk=100 + j, j=j, bv=f"b{j}") for j in (10, 20, 30)])
+    join_view_bootstrap(store, "v", a0, b0, "j", buckets=8)
+    # pk 1 changes (its bucket is rewritten), pk 4 goes (its bucket empties)
+    a1 = a0.filter("pk <> 4").withColumn(
+        "av", F.when(F.col("pk") == 1, F.lit("a1m")).otherwise(F.col("av"))
+    )
+    aff = affected_join_values(a1.filter("pk = 1"), a0.filter("pk IN (1, 4)"), "j")
+    touched, n = jobs(
+        spark, lambda: join_view_repair(store, "v", a1, b0, "j", aff, buckets=8)
+    )
+    assert touched == 2
+    assert sorted(r.pk for r in store.read("v").collect()) == [1, 2, 3]
+    # the touched-bucket list and the rewrite; no census of the
+    # buckets it emptied
+    assert n == 7
+
+
+def test_reads_of_appended_and_partitioned_versions_cost_no_job(spark, tmp_path):
+    store = TableStore(spark, str(tmp_path / "store"))
+    store.append("t__changelog", spark.createDataFrame([(1, 2)], "id long, v int"))
+    store.append(
+        "t__changelog",
+        spark.createDataFrame([(2, 2.5, "x")], "id long, v double, w string"),
+    )
+    df, n = jobs(spark, lambda: store.read("t__changelog"))
+    assert n == 0
+    assert df.dtypes == [("id", "bigint"), ("v", "double"), ("w", "string")]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, 2.0, None), (2, 2.5, "x")]
+
+    parts = spark.range(6).withColumn("p", (F.col("id") % 2).cast("int"))
+    store.write("pt", parts, partition_by=["p"])
+    df, n = jobs(spark, lambda: store.read("pt"))
+    assert n == 0 and df.dtypes == [("id", "bigint"), ("p", "int")]

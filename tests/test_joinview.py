@@ -40,7 +40,7 @@ B0 = [(100, 10, "b1"), (101, 20, "b2"), (102, 20, "b3"), (103, 30, "b4"),
 def _state(store, name):
     return {
         tuple(r)
-        for r in store.read_partitioned(name)
+        for r in store.read(name)
         .select("j", "pk", "av", "bk", "bv")
         .collect()
     }
@@ -52,9 +52,13 @@ def _full(a, b):
     }
 
 
-def _bucket_mtimes(root):
+def _bucket_mtimes(store):
+    """Newest file mtime per bucket of the current version; a bucket
+    carried over from the parent is hard-linked, so its files keep
+    their mtime."""
+    root = store.current_path("v")
     return {
-        d: max(
+        os.path.basename(d): max(
             os.path.getmtime(f)
             for f in glob.glob(os.path.join(d, "*.parquet"))
         )
@@ -90,15 +94,14 @@ def test_repair_equals_full_rejoin(spark, tmp_path):
         pre_images=b0.filter(F.col("bk").isin(100, 101)),
         on="j",
     )
-    root = os.path.join(str(tmp_path / "store"), "v", "pdata")
-    before = _bucket_mtimes(root)
+    before = _bucket_mtimes(store)
     n = join_view_repair(
         store, "v", a1, b1, "j", aff_a.unionByName(aff_b), buckets=B
     )
     assert n > 0
     assert _state(store, "v") == _full(a1, b1)
     # untouched buckets' files were not rewritten (j=40/50 never match)
-    after = _bucket_mtimes(root)
+    after = _bucket_mtimes(store)
     untouched = [
         d for d in before if d in after and after[d] == before[d]
     ]
@@ -122,11 +125,11 @@ def test_emptied_bucket_dropped_and_noop_epoch(spark, tmp_path):
         buckets=B,
     )
     assert n == 1
-    # every bucket dropped: the directory is empty (a fully-emptied
-    # parquet dir is schema-less — reading it is the caller's guard,
-    # same contract as drop_appendable)
-    root = os.path.join(str(tmp_path / "store"), "v", "pdata")
+    # every bucket dropped: the version has no partition directory
+    # and reads as zero rows through its _SCHEMA
+    root = store.current_path("v")
     assert not glob.glob(os.path.join(root, "_jbucket=*"))
+    assert store.read("v").count() == 0
     # no-op epoch: empty affected set rewrites nothing
     assert (
         join_view_repair(
@@ -146,14 +149,16 @@ def test_prebucketed_base_path(spark, tmp_path):
     a0, b0 = _a(spark, A0), _b(spark, B0)
     join_view_bootstrap(store, "v", a0, b0, "j", buckets=B)
     a1 = _a(spark, [r for r in A0 if r[0] != 1] + [(9, 20, "a9")])
-    store.write_partitioned(
-        "a_rep", a1.withColumn(PART_COL, _bucket(F.col("j"), B)), PART_COL
+    store.write(
+        "a_rep",
+        a1.withColumn(PART_COL, _bucket(F.col("j"), B)),
+        partition_by=[PART_COL],
     )
     aff = affected_join_values(
         a1.filter("pk = 9"), a0.filter("pk = 1"), "j"
     )
     join_view_repair(
-        store, "v", store.read_partitioned("a_rep"), b0, "j", aff, buckets=B
+        store, "v", store.read("a_rep"), b0, "j", aff, buckets=B
     )
     assert _state(store, "v") == _full(a1, b0)
 

@@ -54,7 +54,7 @@ def test_cdc_feed_drives_join_view(spark, tmp_path):
     # from the changelog rows this epoch stamped
     delta = store.read("fact__delta")
     epoch = eng.current_epoch("fact")
-    pre = store.read_appendable("fact__changelog").filter(
+    pre = store.read("fact__changelog").filter(
         (F.col(CdcEngine.EPOCH_COL) == epoch)
         & F.col(CdcEngine.CT_COL).isin("update", "delete")
     )
@@ -65,7 +65,7 @@ def test_cdc_feed_drives_join_view(spark, tmp_path):
 
     got = {
         tuple(r)
-        for r in store.read_partitioned("view")
+        for r in store.read("view")
         .select("pk", "j", "v", "dname")
         .collect()
     }

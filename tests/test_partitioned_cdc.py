@@ -1,6 +1,6 @@
 """Partition-pruned incremental writes: only buckets containing
-changed keys are rewritten on disk (the 100 TB write-amplification
-fix)."""
+changed keys are rewritten on disk; the new version hard-links every
+other bucket's files (the 100 TB write-amplification fix)."""
 
 import glob
 import os
@@ -11,18 +11,19 @@ from updater_spark.plans.cdc import CdcEngine
 from updater_spark.schema import TableSpec
 
 
-def _mtimes(store_root: str, table: str) -> dict[str, float]:
-    out = {}
-    for d in glob.glob(os.path.join(store_root, table, "pdata", "_bucket=*")):
-        latest = max(
-            (os.path.getmtime(f) for f in glob.glob(os.path.join(d, "*.parquet"))),
-            default=0,
-        )
-        out[os.path.basename(d)] = latest
-    return out
+def _inodes(store, table: str) -> dict[str, set[int]]:
+    """Inodes of each bucket's files in the current version: a bucket
+    linked from the parent version keeps its inodes."""
+    root = store.current_path(table)
+    return {
+        os.path.basename(d): {
+            os.stat(f).st_ino for f in glob.glob(os.path.join(d, "*.parquet"))
+        }
+        for d in glob.glob(os.path.join(root, "_bucket=*"))
+    }
 
 
-def test_partitioned_update_rewrites_only_touched_buckets(spark, tmp_path):
+def test_partitioned_update_links_untouched_buckets(spark, tmp_path):
     from updater_spark.sources.store import TableStore
 
     root = str(tmp_path / "store")
@@ -33,7 +34,7 @@ def test_partitioned_update_rewrites_only_touched_buckets(spark, tmp_path):
     s0 = [Row(id=i, v=i) for i in range(1, 501)]
     st = engine.update(spec, spark.createDataFrame(s0))
     assert st.bootstrap and st.total_rows == 500
-    before = _mtimes(root, "items")
+    before = _inodes(store, "items")
     assert len(before) == 8  # all buckets materialized
 
     # mutate exactly one key + delete one key → ≤2 buckets affected
@@ -42,14 +43,14 @@ def test_partitioned_update_rewrites_only_touched_buckets(spark, tmp_path):
     assert st1.upserts == 1 and st1.deletes == 1 and st1.deletes_applied
     assert st1.total_rows == 499
 
-    after = _mtimes(root, "items")
+    after = _inodes(store, "items")
     changed_buckets = {b for b in after if after[b] != before.get(b)}
     assert 1 <= len(changed_buckets) <= 2  # only touched buckets rewritten
     untouched = set(before) - changed_buckets
     assert untouched and all(after[b] == before[b] for b in untouched)
 
     # data correctness identical to the full-rewrite path
-    replica = {r["id"]: r["v"] for r in store.read_partitioned("items").collect()}
+    replica = {r["id"]: r["v"] for r in store.read("items").collect()}
     assert replica[7] == 107 and 13 not in replica and len(replica) == 499
 
     # delete guard in partitioned mode: huge delete set → skipped

@@ -64,7 +64,7 @@ def test_cdc_invariants(spark, tmp_path_factory, s0, s1):
     if updated:
         chg = {
             r["id"]: (r["name"], r["counter"])
-            for r in store.read_appendable("t__changelog").collect()
+            for r in store.read("t__changelog").collect()
         }
         assert chg == {i: s0[i] for i in updated}
 

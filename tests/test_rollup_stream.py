@@ -29,7 +29,7 @@ def events(spark, sf_dir):
 def _state(store, table):
     return sorted(
         tuple(r)
-        for r in store.read_partitioned(table).drop("_pday").collect()
+        for r in store.read(table).drop("_pday").collect()
     )
 
 
@@ -83,22 +83,15 @@ def test_write_is_partition_pruned(spark, events, tmp_path):
     apply_rollup_delta(
         store, "ev_rollup", events, "ts", "value", ["event_type"]
     )
-    root = os.path.join(str(tmp_path / "store"), "ev_rollup", "pdata")
-    days = sorted(glob.glob(os.path.join(root, "_pday=*")))
+    before = _day_mtimes(store)
+    days = sorted(before)
     assert len(days) >= 2  # events span multiple days
 
-    def mtimes():
-        return {
-            d: max(os.path.getmtime(f) for f in glob.glob(os.path.join(d, "*.parquet")))
-            for d in days
-        }
-
-    before = mtimes()
     one_day = events.orderBy("ts").limit(50)
     apply_rollup_delta(
         store, "ev_rollup", one_day, "ts", "value", ["event_type"]
     )
-    after = mtimes()
+    after = _day_mtimes(store)
     touched = {d for d in days if after[d] != before[d]}
     n_days = one_day.select(F.to_date("ts")).distinct().count()
     assert len(touched) <= n_days  # only the hit partitions rewritten
@@ -109,9 +102,15 @@ def test_write_is_partition_pruned(spark, events, tmp_path):
     )
 
 
-def _day_mtimes(root):
+def _day_mtimes(store):
+    """Newest file mtime per day partition of the current version; a
+    day carried over from the parent is hard-linked, so its files keep
+    their mtime."""
+    root = store.current_path("ev_rollup")
     return {
-        d: max(os.path.getmtime(f) for f in glob.glob(os.path.join(d, "*.parquet")))
+        os.path.basename(d): max(
+            os.path.getmtime(f) for f in glob.glob(os.path.join(d, "*.parquet"))
+        )
         for d in glob.glob(os.path.join(root, "_pday=*"))
     }
 
@@ -125,8 +124,7 @@ def test_repair_after_update_delete(spark, events, tmp_path):
     apply_rollup_delta(
         store, "ev_rollup", events, "ts", "value", ["event_type"]
     )
-    root = os.path.join(str(tmp_path / "store"), "ev_rollup", "pdata")
-    before = _day_mtimes(root)
+    before = _day_mtimes(store)
 
     # mutations confined to the first 3 days: the repair must leave
     # every later day's files alone.
@@ -157,15 +155,15 @@ def test_repair_after_update_delete(spark, events, tmp_path):
         store, "ev_rollup", replica, days, "ts", "value", ["event_type"]
     )
     assert _state(store, "ev_rollup") == _expected(replica)
-    after = _day_mtimes(root)
+    after = _day_mtimes(store)
     days_s = {str(x) for x in days}
-    untouched = {d for d in before if os.path.basename(d)[6:] not in days_s}
+    untouched = {d for d in before if d[6:] not in days_s}
     assert untouched and all(after[d] == before[d] for d in untouched)
 
 
 def test_repair_drops_fully_deleted_day(spark, events, tmp_path):
     """Deleting every row of one day must remove that day's partition
-    (dynamic overwrite alone would leave it stale)."""
+    from the new version."""
     store = TableStore(spark, str(tmp_path / "store"))
     apply_rollup_delta(
         store, "ev_rollup", events, "ts", "value", ["event_type"]
@@ -178,6 +176,6 @@ def test_repair_drops_fully_deleted_day(spark, events, tmp_path):
     rollup_repair_days(
         store, "ev_rollup", replica, days, "ts", "value", ["event_type"]
     )
-    root = os.path.join(str(tmp_path / "store"), "ev_rollup", "pdata")
+    root = store.current_path("ev_rollup")
     assert not os.path.exists(os.path.join(root, f"_pday={target}"))
     assert _state(store, "ev_rollup") == _expected(replica)

@@ -149,9 +149,7 @@ def test_partitioned_mode_schema_epoch_full_rewrite_then_prunes(
     eng.update(SPEC, spark.createDataFrame(base_rows()))
     src2 = _evolve_add(spark, mutate_ids={5, 9}, delete_ids={3})
     eng.update(SPEC, src2)
-    got = tmp_store.spark.read.parquet(
-        tmp_store._ppath("acct")
-    ).drop(CdcEngine.BUCKET_COL)
+    got = tmp_store.read("acct").drop(CdcEngine.BUCKET_COL)
     assert sorted(tuple(r) for r in got.select(*src2.columns).collect()) == _sorted(src2)
     # the table is still bucket-partitioned and the next epoch still
     # does incremental pruned writes
@@ -160,9 +158,7 @@ def test_partitioned_mode_schema_epoch_full_rewrite_then_prunes(
     )
     stats3 = eng.update(SPEC, src3)
     assert stats3.extra == {} and stats3.updates == 1
-    got3 = tmp_store.spark.read.parquet(
-        tmp_store._ppath("acct")
-    ).drop(CdcEngine.BUCKET_COL)
+    got3 = tmp_store.read("acct").drop(CdcEngine.BUCKET_COL)
     assert (
         sorted(tuple(r) for r in got3.select(*src3.columns).collect())
         == _sorted(src3)
@@ -619,3 +615,35 @@ def test_type_change_on_legacy_sidecar_is_skipped(spark, tmp_store):
     )
     stats3 = eng.update(SPEC, src3)
     assert "type_changed" in stats3.extra["schema_change"]
+
+
+def test_changelog_reads_across_a_type_change(spark, tmp_store):
+    """An int -> double epoch leaves int pre-images in the changelog
+    before it and double ones after it. The changelog's _SCHEMA carries
+    double, Spark reads the older int files under it, and both the
+    changelog and a replay to the boundary epoch read — no footer merge
+    of incompatible types."""
+    spec = TableSpec("tc", "id")
+    eng = CdcEngine(tmp_store, changelog_mode="full")
+    ints = spark.createDataFrame(
+        [(i, i * 10) for i in range(1, 11)], "id long, v int"
+    )
+    eng.update(spec, ints)
+    doubles = spark.createDataFrame(
+        [(i, i * 10 + (0.5 if i == 3 else 0.0)) for i in range(1, 11)],
+        "id long, v double",
+    )
+    stats = eng.update(spec, doubles)  # epoch 1: the type boundary
+    assert [c for c, _, _ in stats.extra["schema_change"]["type_changed"]] == ["v"]
+    eng.update(spec, doubles.withColumn(  # epoch 2: a normal epoch
+        "v", F.when(F.col("id") == 4, F.lit(99.5)).otherwise(F.col("v"))
+    ))
+
+    log = eng.changelog("tc")
+    assert dict(log.dtypes)["v"] == "double"
+    pre = {(r["_epoch"], r["id"]): r["v"] for r in log.collect()}
+    assert len(pre) == 11  # every row at the boundary, id 4 after it
+    assert pre[(1, 3)] == 30.0 and pre[(2, 4)] == 40.0
+
+    back = {r["id"]: r["v"] for r in eng.replay(spec, 1).collect()}
+    assert back == {i: i * 10 + (0.5 if i == 3 else 0.0) for i in range(1, 11)}

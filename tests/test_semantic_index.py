@@ -500,15 +500,15 @@ def test_compact_crash_window_keeps_updated_rows_live(
     live_before = sorted(tuple(r) for r in idx.assignments().collect())
     assert idx.log_stats()["tomb_rows"] > 0  # updates + removes logged
 
-    real_drop = tmp_store.drop_appendable
+    real_drop = tmp_store.drop
 
     def boom(name):
         raise RuntimeError("crash before log drop")
 
-    monkeypatch.setattr(tmp_store, "drop_appendable", boom)
+    monkeypatch.setattr(tmp_store, "drop", boom)
     with pytest.raises(RuntimeError, match="crash before log drop"):
         idx.compact()
-    monkeypatch.setattr(tmp_store, "drop_appendable", real_drop)
+    monkeypatch.setattr(tmp_store, "drop", real_drop)
 
     # the crash window: rewrite landed, tombstones still present —
     # every live row must still read as live
@@ -541,10 +541,10 @@ def test_append_log_crash_retry_is_safe(spark, corpus, tmp_store):
     seq = idx._seq() + 1
     tmp_store.write_sidecar(idx._cells, "seq", str(seq))
     partial = idx._assign(delta.filter(k % 8 == 0), idx.centroids())
-    tmp_store.append_partitions(
+    tmp_store.append(
         idx._cells,
         partial.withColumn("seq", F.lit(seq)).repartition("cell"),
-        "cell",
+        partition_by=["cell"],
     )
 
     # replay the whole epoch, then compare against a clean twin

@@ -139,22 +139,23 @@ def test_break_is_rename_based_and_verifies_inode(spark, tmp_path):
 
 
 def test_locked_is_reentrant_within_instance_only(spark, tmp_path):
-    """Multi-step maintenance (overwrite+drop under one locked())
-    must not deadlock on its own nested per-op locks, while a second
-    TableStore instance — a different logical writer — is still shut
-    out for the whole sequence."""
+    """Multi-step maintenance (write + partition overwrite under one
+    locked()) must not deadlock on its own nested per-op locks, while a
+    second TableStore instance — a different logical writer — is still
+    shut out for the whole sequence."""
     store = TableStore(spark, str(tmp_path / "s"))
     other = TableStore(spark, str(tmp_path / "s"))
     base = _df(spark, 8)
     df = base.withColumn("p", base.k % 2)
     with store.locked("pt"):
-        store.write_partitioned("pt", df, "p")  # nested lock: no-op
+        store.write("pt", df, partition_by=["p"])  # nested lock: no-op
         with pytest.raises(ConcurrentWriteError):
-            other.write_partitioned("pt", df, "p")
-        store.drop_partitions("pt", "p", [1])
+            other.write("pt", df, partition_by=["p"])
+        store.overwrite_partitions("pt", df.filter("p = 0"), "p", [1])
+    assert store.read("pt").count() == 4  # partition p=1 emptied
     # lock fully released after the outermost exit
-    other.write_partitioned("pt", df, "p")
-    assert store.read_partitioned("pt").count() == 8
+    other.write("pt", df, partition_by=["p"])
+    assert store.read("pt").count() == 8
 
 
 def test_lock_released_after_write_and_unreadable_lock_refused(

@@ -4,6 +4,9 @@ A version's ``_SCHEMA`` must give exactly the schema Spark would infer
 from its files; a version without one must still read; an empty
 version must read as zero rows through Spark and pyarrow; a linked
 version must keep its rows after the source version is collected.
+Every mutation makes a new version, so a DataFrame read before it
+still collects the rows it saw, and the previous version stays
+readable by number.
 """
 
 import datetime
@@ -13,6 +16,7 @@ import random
 
 import pyarrow.parquet as pq
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     DecimalType,
@@ -139,3 +143,75 @@ def test_linked_bootstrap_delta_outlives_its_source_version(spark, tmp_store):
     assert not os.path.exists(source_version)
     assert _rows(tmp_store.read("player__delta")) == boot_rows
     assert len(boot_rows) == 50
+
+
+def _assert_snapshot_survives(store, name, mutate):
+    """A DataFrame read before ``mutate`` collects the same rows after
+    it, and so does a read of the parent version by number; returns
+    the current rows."""
+    before = store.read(name)
+    rows = _rows(before)
+    mutate(before)
+    assert _rows(before) == rows
+    assert _rows(store.read(name, version=store.versions(name)[-2])) == rows
+    return _rows(store.read(name))
+
+
+def _partitioned(spark, store):
+    df = spark.range(12).withColumn("p", (F.col("id") % 3).cast("int"))
+    store.write("pt", df, partition_by=["p"])
+
+
+def test_snapshot_survives_partition_overwrite_that_empties_one(spark, tmp_store):
+    _partitioned(spark, tmp_store)
+    # rewrite partitions 1 and 2 from the parent: 1 ends up empty
+    now = _assert_snapshot_survives(
+        tmp_store,
+        "pt",
+        lambda old: tmp_store.overwrite_partitions(
+            "pt", old.filter("p = 2 AND id > 5"), "p", [1, 2]
+        ),
+    )
+    assert now == [(0, 0), (3, 0), (6, 0), (8, 2), (9, 0), (11, 2)]
+    assert not os.path.exists(os.path.join(tmp_store.current_path("pt"), "p=1"))
+
+
+def test_snapshot_survives_partitioned_append(spark, tmp_store):
+    _partitioned(spark, tmp_store)
+    new = spark.createDataFrame([(100, 1), (101, 7)], "id long, p int")
+    now = _assert_snapshot_survives(
+        tmp_store, "pt", lambda _: tmp_store.append("pt", new, partition_by=["p"])
+    )
+    assert len(now) == 14 and (101, 7) in now
+    assert tmp_store.read("pt").columns == ["id", "p"]
+
+
+def test_snapshot_survives_changelog_append(spark, tmp_store):
+    tmp_store.append("t__changelog", spark.createDataFrame([(1, "a")], "id long, v string"))
+    wider = spark.createDataFrame([(2, "b", 1.5)], "id long, v string, w double")
+    now = _assert_snapshot_survives(
+        tmp_store, "t__changelog", lambda _: tmp_store.append("t__changelog", wider)
+    )
+    assert now == [(1, "a", None), (2, "b", 1.5)]
+
+
+def test_snapshot_survives_compaction(spark, tmp_store):
+    for i in range(3):
+        tmp_store.append("t__changelog", spark.range(i * 5, i * 5 + 5))
+    now = _assert_snapshot_survives(
+        tmp_store,
+        "t__changelog",
+        lambda _: CdcEngine(tmp_store).compact_changelog("t", num_files=1),
+    )
+    assert now == [(i,) for i in range(15)]
+    files = os.listdir(tmp_store.current_path("t__changelog"))
+    assert len([f for f in files if f.endswith(".parquet")]) == 1
+
+
+def test_drop_never_reuses_a_version_number(spark, tmp_store):
+    tmp_store.write("t", spark.range(3))
+    tmp_store.drop("t")
+    assert not tmp_store.exists("t") and tmp_store.versions("t") == []
+    tmp_store.write("t", spark.range(2))
+    assert tmp_store.versions("t") == [1]
+    assert tmp_store.read("t").count() == 2

@@ -17,10 +17,11 @@ Storage (via TableStore):
   by bucket — searches prune to probed cells at the parquet level
   (tests/test_similarity.py asserts the PartitionFilters).
 
-``upsert(delta)`` re-assigns only the delta, then dynamically
-overwrites ONLY the affected cell partitions: the new vectors' cells
-plus any cell holding a stale copy of a re-ingested id (an updated
-vector can migrate buckets — the stale copy must leave its OLD cell).
+``upsert(delta)`` re-assigns only the delta, then rewrites ONLY the
+affected cell partitions (``TableStore.overwrite_partitions``): the
+new vectors' cells plus any cell holding a stale copy of a re-ingested
+id (an updated vector can migrate buckets — the stale copy must leave
+its OLD cell).
 The old-cell lookup is an id-join against the index's (id, bucket)
 columns — a column-pruned scan; corpora where that scan dominates
 should add an id→bucket sidecar, the same trade as a secondary index.
@@ -74,49 +75,19 @@ def cell_maintenance_stats(
     inserts: DataFrame | None,
     id_col: str,
     part_col: str,
-) -> tuple[list, list]:
-    """ONE aggregation job computing everything incremental index
-    maintenance needs: per partition cell, how many stored rows it
-    has, how many of those are stale copies of touched ids, and how
-    many new rows land in it. From those k rows (k = codebook size, a
-    driver-safe bound independent of corpus size) derive
+) -> list:
+    """ONE job listing the cells incremental index maintenance must
+    rewrite: those holding a stale copy of a touched id, or receiving
+    an insert. At most k rows (k = codebook size, a driver-safe bound
+    independent of corpus size). A rewritten cell left empty is simply
+    absent from the new version (``TableStore.overwrite_partitions``).
 
-    - ``affected``: cells that must be rewritten (hold a stale copy,
-      or receive an insert), and
-    - ``to_drop``: affected cells left EMPTY by the rebuild — dynamic
-      partition overwrite only replaces partitions present in the new
-      data, so emptied ones need an explicit drop.
-
-    Shared by ``IvfIndex`` (part_col='bucket') and ``IvfPqIndex``
-    (part_col='cell'); replaces what used to be four
-    distinct().collect() jobs per maintenance op."""
-    hits = touched_ids.withColumn("_hit", F.lit(1))
-    per_old = (
-        idx.select(id_col, part_col)
-        .join(hits, id_col, "left")
-        .groupBy(part_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count("_hit").alias("n_stale"),
-        )
-    )
+    Shared by ``IvfIndex`` (part_col='bucket'), ``IvfPqIndex``
+    (part_col='cell') and ``SemanticIndex``."""
+    cells = idx.join(touched_ids, id_col, "semi").select(part_col)
     if inserts is not None:
-        per_new = inserts.groupBy(part_col).agg(
-            F.count(F.lit(1)).alias("n_ins")
-        )
-        stats = per_old.join(per_new, part_col, "full").fillna(
-            0, ["n_rows", "n_stale", "n_ins"]
-        )
-    else:
-        stats = per_old.withColumn("n_ins", F.lit(0))
-    affected, to_drop = [], []
-    for r in stats.collect():
-        if r["n_stale"] == 0 and r["n_ins"] == 0:
-            continue  # untouched cell
-        affected.append(r[part_col])
-        if r["n_rows"] - r["n_stale"] + r["n_ins"] == 0:
-            to_drop.append(r[part_col])
-    return affected, to_drop
+        cells = cells.unionByName(inserts.select(part_col))
+    return [r[0] for r in cells.distinct().collect()]
 
 
 def cell_occupancy_stats(idx: DataFrame, part_col: str) -> dict:
@@ -208,7 +179,7 @@ class IvfIndex:
         return f"{self.name}__codebook"
 
     def exists(self) -> bool:
-        return self.store.exists_partitioned(self._cells)
+        return self.store.exists(self._cells)
 
     # -- codebook ------------------------------------------------------
     def _codebook_state(self) -> tuple[list[list[float]], str]:
@@ -248,8 +219,8 @@ class IvfIndex:
             # bucket directory (tasks × cells tiny files); with it
             # each cell gets its task's worth of files and reads stay
             # listing-cheap
-            self.store.write_partitioned(
-                self._cells, assigned.repartition("bucket"), "bucket"
+            self.store.write(
+                self._cells, assigned.repartition("bucket"), partition_by=["bucket"]
             )
             self.store.write(
                 self._codebook,
@@ -275,33 +246,22 @@ class IvfIndex:
                 "re-run bootstrap()"
             )
 
-    def _cell_stats(
-        self, idx: DataFrame, touched_ids: DataFrame, inserts: DataFrame | None
-    ) -> tuple[list, list]:
-        """See ``cell_maintenance_stats`` (shared with IvfPqIndex)."""
-        return cell_maintenance_stats(
-            idx, touched_ids, inserts, self.id_col, "bucket"
-        )
-
     def upsert(self, delta: DataFrame) -> None:
         """Insert or replace the delta's vectors; only affected cell
         partitions are rewritten (the new vectors' cells plus any cell
         holding a stale copy — an updated vector can migrate buckets).
 
-        Two Spark jobs total: the ``_cell_stats`` bookkeeping pass and
-        the dynamic-partition-overwrite of the affected cells.
-
-        ``delta`` (and ``remove``'s ``ids``) must not be a LAZY plan
-        over this index's own storage: the rewrite deletes files such
-        a plan would re-scan on its next evaluation. Derive deltas
-        from the upstream source, or materialize first."""
+        Two Spark jobs total: the ``cell_maintenance_stats``
+        bookkeeping pass and the write of the affected cells."""
         cents = self.centroids()
         with self.store.locked(self._cells):
             self._check_identity()
             assigned = ivf_assign(delta, cents, self.id_col, self.vec_col)
-            idx = self.store.read_partitioned(self._cells)
+            idx = self.store.read(self._cells)
             delta_ids = delta.select(self.id_col).distinct()
-            affected, to_drop = self._cell_stats(idx, delta_ids, assigned)
+            affected = cell_maintenance_stats(
+                idx, delta_ids, assigned, self.id_col, "bucket"
+            )
             if not affected:
                 return
             rebuilt = (
@@ -310,31 +270,27 @@ class IvfIndex:
                 .unionByName(assigned.select(*idx.columns))
             )
             self.store.overwrite_partitions(
-                self._cells, rebuilt.repartition("bucket"), "bucket"
+                self._cells, rebuilt.repartition("bucket"), "bucket", affected
             )
-            self.store.drop_partitions(self._cells, "bucket", to_drop)
 
     def remove(self, ids: DataFrame) -> None:
         """Drop vectors by id; rewrites (or drops) only their cells.
         Same two-job shape as ``upsert``."""
         with self.store.locked(self._cells):
             self._check_identity()
-            idx = self.store.read_partitioned(self._cells)
+            idx = self.store.read(self._cells)
             key = ids.select(self.id_col).distinct()
-            affected, to_drop = self._cell_stats(idx, key, None)
+            affected = cell_maintenance_stats(
+                idx, key, None, self.id_col, "bucket"
+            )
             if not affected:
                 return
             rebuilt = idx.filter(F.col("bucket").isin(affected)).join(
                 key, self.id_col, "anti"
             )
-            # an affected cell can be fully emptied; overwrite replaces
-            # the survivors' partitions, drop removes the emptied ones
-            survivors = [b for b in affected if b not in set(to_drop)]
-            if survivors:
-                self.store.overwrite_partitions(
-                    self._cells, rebuilt.repartition("bucket"), "bucket"
-                )
-            self.store.drop_partitions(self._cells, "bucket", to_drop)
+            self.store.overwrite_partitions(
+                self._cells, rebuilt.repartition("bucket"), "bucket", affected
+            )
 
     def retrain(
         self,
@@ -349,15 +305,10 @@ class IvfIndex:
         the only way a fixed-codebook index recovers from
         drift-induced cell skew; upsert/remove never move centroids.
 
-        ``corpus`` defaults to the index's OWN stored vectors; that
-        self-read is eagerly materialized (``localCheckpoint``)
-        BEFORE bootstrap rewrites the cell files — a lazy plan over
-        the store would re-scan deleted files mid-rebuild (and
-        ``persist()`` does not protect a plan whose early evaluation
-        races the rewrite). At deploy scale prefer passing
-        ``corpus=`` from the upstream source: the self-read pins a
-        full corpus copy in executor storage for the duration of the
-        rebuild. ``k`` defaults to the current codebook size.
+        ``corpus`` defaults to the index's OWN stored vectors, read
+        from the version current before the rebuild (which writes a
+        new one and leaves that one readable). ``k`` defaults to the
+        current codebook size.
 
         Returns ``{"codebook": new_id, "occupancy": post-stats}``.
         Single-writer contract: same as every maintenance op — the
@@ -367,10 +318,8 @@ class IvfIndex:
         if k is None:
             k = len(self.centroids())
         if corpus is None:
-            corpus = (
-                self.store.read_partitioned(self._cells)
-                .select(self.id_col, self.vec_col)
-                .localCheckpoint(eager=True)
+            corpus = self.store.read(self._cells).select(
+                self.id_col, self.vec_col
             )
         cents = ivf_train(
             corpus,
@@ -411,7 +360,7 @@ class IvfIndex:
         when drift warrants a re-bootstrap (``retrain``/
         ``maybe_retrain`` is the actuator)."""
         return cell_occupancy_stats(
-            self.store.read_partitioned(self._cells), "bucket"
+            self.store.read(self._cells), "bucket"
         )
 
     # -- search --------------------------------------------------------
@@ -448,7 +397,7 @@ class IvfIndex:
         predicate/semi-join applies inside the probe-pruned
         partition scan, never a corpus shuffle."""
         self._check_identity()
-        stored = self.store.read_partitioned(self._cells)
+        stored = self.store.read(self._cells)
         if where is not None:
             stored = stored.filter(where)
         if allowed is not None:
@@ -491,12 +440,12 @@ class IvfPqIndex:
       touch |affected cells| directories.
 
     ``upsert(delta)`` re-encodes ONLY the delta (cell assignment +
-    residual codes via ``ivfpq_assign``), then dynamically overwrites
-    only the affected cell partitions — the new vectors' cells plus
+    residual codes via ``ivfpq_assign``), then rewrites only the
+    affected cell partitions — the new vectors' cells plus
     any cell holding a stale copy of a re-ingested id (an updated
     vector can migrate cells; its stale codes must leave the OLD
     cell). Two Spark jobs per op: ``cell_maintenance_stats`` + the
-    dynamic partition overwrite, exactly IvfIndex's shape.
+    partition rewrite, exactly IvfIndex's shape.
 
     The quantizer is immutable between bootstraps (upsert never
     retrains — residual codebooks drift slowly; retraining is a new
@@ -526,7 +475,7 @@ class IvfPqIndex:
         return f"{self.name}__quantizer"
 
     def exists(self) -> bool:
-        return self.store.exists_partitioned(self._cells)
+        return self.store.exists(self._cells)
 
     # -- quantizer ------------------------------------------------------
     def _quantizer_state(
@@ -595,8 +544,8 @@ class IvfPqIndex:
             )
             # task/cell alignment before the partitioned write — same
             # small-files argument as IvfIndex.bootstrap
-            self.store.write_partitioned(
-                self._cells, assigned.repartition("cell"), "cell"
+            self.store.write(
+                self._cells, assigned.repartition("cell"), partition_by=["cell"]
             )
             self.store.write(
                 self._quantizer,
@@ -632,18 +581,16 @@ class IvfPqIndex:
     def upsert(self, delta: DataFrame) -> None:
         """Insert or replace the delta's vectors: re-encode ONLY the
         delta against the stored quantizer, rewrite only affected
-        cell partitions. ``delta`` must not be a lazy plan over this
-        index's own storage (the rewrite deletes files such a plan
-        would re-scan) — derive deltas from the upstream source."""
+        cell partitions."""
         cents, books, _ = self._quantizer_state()
         with self.store.locked(self._cells):
             self._check_identity()
             assigned = ivfpq_assign(
                 delta, cents, books, self.id_col, self.vec_col
             )
-            idx = self.store.read_partitioned(self._cells)
+            idx = self.store.read(self._cells)
             delta_ids = delta.select(self.id_col).distinct()
-            affected, to_drop = cell_maintenance_stats(
+            affected = cell_maintenance_stats(
                 idx, delta_ids, assigned, self.id_col, "cell"
             )
             if not affected:
@@ -654,17 +601,16 @@ class IvfPqIndex:
                 .unionByName(assigned.select(*idx.columns))
             )
             self.store.overwrite_partitions(
-                self._cells, rebuilt.repartition("cell"), "cell"
+                self._cells, rebuilt.repartition("cell"), "cell", affected
             )
-            self.store.drop_partitions(self._cells, "cell", to_drop)
 
     def remove(self, ids: DataFrame) -> None:
         """Drop vectors by id; rewrites (or drops) only their cells."""
         with self.store.locked(self._cells):
             self._check_identity()
-            idx = self.store.read_partitioned(self._cells)
+            idx = self.store.read(self._cells)
             key = ids.select(self.id_col).distinct()
-            affected, to_drop = cell_maintenance_stats(
+            affected = cell_maintenance_stats(
                 idx, key, None, self.id_col, "cell"
             )
             if not affected:
@@ -672,12 +618,9 @@ class IvfPqIndex:
             rebuilt = idx.filter(F.col("cell").isin(affected)).join(
                 key, self.id_col, "anti"
             )
-            survivors = [c for c in affected if c not in set(to_drop)]
-            if survivors:
-                self.store.overwrite_partitions(
-                    self._cells, rebuilt.repartition("cell"), "cell"
-                )
-            self.store.drop_partitions(self._cells, "cell", to_drop)
+            self.store.overwrite_partitions(
+                self._cells, rebuilt.repartition("cell"), "cell", affected
+            )
 
     def retrain(
         self,
@@ -757,7 +700,7 @@ class IvfPqIndex:
         IVF-PQ quantizer never retrains in place between bootstraps;
         this is the signal that schedules ``retrain(corpus)``."""
         return cell_occupancy_stats(
-            self.store.read_partitioned(self._cells), "cell"
+            self.store.read(self._cells), "cell"
         )
 
     # -- search --------------------------------------------------------
@@ -785,7 +728,7 @@ class IvfPqIndex:
         ``nprobe`` cells (raise nprobe)."""
         self._check_identity()
         cents, books, ident = self._quantizer_state()
-        stored = self.store.read_partitioned(self._cells)
+        stored = self.store.read(self._cells)
         if where is not None:
             stored = stored.filter(where)
         if allowed is not None:

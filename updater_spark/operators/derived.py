@@ -22,7 +22,7 @@ Cost per cycle: O(members of affected groups) compute +
 O(buckets touched / B) of the stored table rewritten — both scale
 with the delta, not the corpus. A group whose rows all disappeared
 drops out of the recompute and is anti-joined away; a bucket emptied
-entirely is removed explicitly (dynamic overwrite cannot).
+entirely is absent from the new version.
 """
 
 from __future__ import annotations
@@ -97,8 +97,10 @@ def stats_bootstrap(
 ) -> None:
     """Full compute + hash-bucket-partitioned write (first run)."""
     full = group_stats(tribe, member, player, stat_columns)
-    store.write_partitioned(
-        table, full.withColumn(PART_COL, _bucket(F.col("id"), buckets)), PART_COL
+    store.write(
+        table,
+        full.withColumn(PART_COL, _bucket(F.col("id"), buckets)),
+        partition_by=[PART_COL],
     )
 
 
@@ -162,21 +164,11 @@ def stats_repair(
         ).withColumn(PART_COL, _bucket(F.col("id"), buckets))
 
         kept = (
-            store.read_partitioned(table)
+            store.read(table)
             .filter(F.col(PART_COL).isin(touched))
             .join(aff_t, "id", "anti")
         )
-        merged = kept.unionByName(new_stats.select(*kept.columns)).persist()
-        try:
-            still = {
-                r[0] for r in merged.select(PART_COL).distinct().collect()
-            }
-            emptied = [b for b in touched if b not in still]
-            if emptied:
-                store.drop_partitions(table, PART_COL, emptied)
-            if still:
-                store.overwrite_partitions(table, merged, PART_COL)
-        finally:
-            merged.unpersist()
+        merged = kept.unionByName(new_stats.select(*kept.columns))
+        store.overwrite_partitions(table, merged, PART_COL, touched)
     finally:
         aff.unpersist()

@@ -21,8 +21,10 @@ pattern, plans/cdc.py:463):
 - Per epoch: collect the affected join values' BUCKET ids (a tiny
   distinct-collect, like derived.py's touched list), recompute
   ``A' ⋈ B'`` restricted to those buckets (both scans
-  bucket-pruned BEFORE the join shuffle), dynamically overwrite
-  exactly those partitions, and drop any bucket the rewrite emptied.
+  bucket-pruned BEFORE the join shuffle), and write exactly those
+  partitions as a new version that links every other bucket's files
+  (``TableStore.overwrite_partitions``; a bucket the rewrite emptied
+  is simply absent).
 - Cost per epoch: O(touched_buckets / buckets) of the view rewritten
   + one delta-sized distinct — scales with the delta's join-value
   spread, not with |A ⋈ B|.
@@ -95,8 +97,10 @@ def join_view_bootstrap(
     repartition aligns write tasks with partitions — without it every
     join task emits a file into every bucket directory (the
     tasks × partitions small-file bomb rollup_stream measured)."""
-    store.write_partitioned(
-        name, _joined(a, b, on, buckets).repartition(PART_COL), PART_COL
+    store.write(
+        name,
+        _joined(a, b, on, buckets).repartition(PART_COL),
+        partition_by=[PART_COL],
     )
 
 
@@ -138,18 +142,8 @@ def join_view_repair(
             return side.filter(F.col(PART_COL).isin(touched)).drop(PART_COL)
         return side.filter(_bucket(F.col(on), buckets).isin(touched))
 
-    va = _pruned(a_new)
-    vb = _pruned(b_new)
-    fresh = _joined(va, vb, on, buckets).persist()
-    try:
-        still = {r[0] for r in fresh.select(PART_COL).distinct().collect()}
-        emptied = [x for x in touched if x not in still]
-        if emptied:
-            store.drop_partitions(name, PART_COL, emptied)
-        if still:
-            store.overwrite_partitions(
-                name, fresh.repartition(PART_COL), PART_COL
-            )
-    finally:
-        fresh.unpersist()
+    fresh = _joined(_pruned(a_new), _pruned(b_new), on, buckets)
+    store.overwrite_partitions(
+        name, fresh.repartition(PART_COL), PART_COL, touched
+    )
     return len(touched)

@@ -25,14 +25,14 @@ Storage (via TableStore):
   IvfPqIndex).
 
 ``update(delta)`` re-assigns only the delta, rewrites only affected
-cell partitions (``cell_maintenance_stats`` — one aggregation job,
-shared with the ANN indexes), then returns the epoch's NEW near-dup
-pairs: delta x stored-others in the same cell ∪ delta x delta. A
+cell partitions (``cell_maintenance_stats`` — one job, shared with
+the ANN indexes), then returns the epoch's NEW near-dup pairs: delta
+x stored-others in the same cell ∪ delta x delta. A
 re-ingested id's old vector leaves its cell first, so a changed
 embedding never pairs through its stale position.
 
 When churn per epoch is comparable to the cell count, EVERY partition
-holds a delta row and the dynamic overwrite degenerates into a full
+holds a delta row and the partition rewrite degenerates into a full
 rewrite per epoch (measured: PROBES_r6 cdcindex, 10M × 4000 cells ×
 1.5% churn) — ``append_log=True`` switches maintenance to an
 append + tombstone + deferred-compaction layout (LSM) whose epochs
@@ -83,15 +83,16 @@ class SemanticIndex:
         append_log: bool = False,
     ):
         """``append_log=True`` is the HIGH-CHURN deploy mode: epochs
-        APPEND delta rows (stamped with an epoch ``seq``) into the
-        existing cell directories and APPEND tombstones to a
-        ``{name}__tomb`` log instead of dynamically overwriting every
-        touched partition — the PROBES_r6 cdcindex run measured the
-        overwrite path write-bound at 10M rows × 4000 cells × 1.5%
-        churn (every partition holds a delta row, so each epoch
-        rewrites the whole table and loses to a rebuild). With the
-        log, an epoch writes O(|delta|) bytes; readers reconcile
-        (row live iff its seq ≥ the id's newest tombstone seq),
+        APPEND delta rows (stamped with an epoch ``seq``) to the cells
+        table and APPEND tombstones to a ``{name}__tomb`` log
+        (``TableStore.append``: new files plus hard links to the
+        existing ones) instead of rewriting every touched partition —
+        the PROBES_r6 cdcindex run measured the overwrite path
+        write-bound at 10M rows × 4000 cells × 1.5% churn (every
+        partition holds a delta row, so each epoch rewrites the whole
+        table and loses to a rebuild). With the log, an epoch writes
+        O(|delta|) bytes (and one link per existing file); readers
+        reconcile (row live iff its seq ≥ the id's newest tombstone seq),
         and ``compact()`` folds the log down when ``log_stats()``
         says the dead fraction is worth it — the LSM trade. Epoch
         crash-retry is safe: the epoch seq is claimed FIRST, so a
@@ -149,13 +150,13 @@ class SemanticIndex:
         copies and deletes kill everything). The tombstone side is a
         per-id max over the log — churn-sized, not corpus-sized —
         joined once per read; ``compact()`` folds it away."""
-        rows = self.store.read_partitioned(self._cells)
+        rows = self.store.read(self._cells)
         if not self.append_log:
             return rows
-        if not self.store.exists_appendable(self._tomb):
+        if not self.store.exists(self._tomb):
             return rows.select("id", "u", "cell")
         newest = (
-            self.store.read_appendable(self._tomb)
+            self.store.read(self._tomb)
             .groupBy("id")
             .agg(F.max("seq").alias("_tseq"))
         )
@@ -168,7 +169,7 @@ class SemanticIndex:
         )
 
     def exists(self) -> bool:
-        return self.store.exists_partitioned(self._cells)
+        return self.store.exists(self._cells)
 
     # -- codebook ------------------------------------------------------
     def _codebook_state(self) -> tuple[list[list[float]], str]:
@@ -332,11 +333,11 @@ class SemanticIndex:
                 # new rows, and every pre-promote crash window still
                 # fails loudly on the identity check
                 assigned = assigned.withColumn("seq", F.lit(0))
-            self.store.write_partitioned(
-                self._cells, assigned.repartition("cell"), "cell"
+            self.store.write(
+                self._cells, assigned.repartition("cell"), partition_by=["cell"]
             )
             if self.append_log:
-                self.store.drop_appendable(self._tomb)
+                self.store.drop(self._tomb)
                 self.store.write_sidecar(self._cells, "seq", "0")
             self.store.write(
                 self._codebook,
@@ -480,8 +481,8 @@ class SemanticIndex:
 
         Write engine: ``append_log`` mode appends the stamped delta
         rows + tombstones for the delta's ids (O(|delta|) bytes — a
-        re-ingest's older copies die by seq) instead of dynamically
-        overwriting every touched cell partition; see the class
+        re-ingest's older copies die by seq) instead of rewriting
+        every touched cell partition; see the class
         docstring for the crash-retry and compaction story."""
         cents, _ = self._codebook_state()
         with self.store.locked(self._cells):
@@ -519,16 +520,16 @@ class SemanticIndex:
                 self.store.append(
                     self._tomb, delta_ids.withColumn("seq", F.lit(seq))
                 )
-                self.store.append_partitions(
+                self.store.append(
                     self._cells,
                     assigned.withColumn("seq", F.lit(seq)).repartition(
                         "cell"
                     ),
-                    "cell",
+                    partition_by=["cell"],
                 )
             else:
-                idx = self.store.read_partitioned(self._cells)
-                affected, to_drop = cell_maintenance_stats(
+                idx = self.store.read(self._cells)
+                affected = cell_maintenance_stats(
                     idx, delta_ids, assigned, "id", "cell"
                 )
                 pre = self._pre_sizes(idx, affected)
@@ -539,10 +540,7 @@ class SemanticIndex:
                         .unionByName(assigned.select(*idx.columns))
                     )
                     self.store.overwrite_partitions(
-                        self._cells, rebuilt.repartition("cell"), "cell"
-                    )
-                    self.store.drop_partitions(
-                        self._cells, "cell", to_drop
+                        self._cells, rebuilt.repartition("cell"), "cell", affected
                     )
         stored = self._stored()
         dim = len(cents[0])
@@ -599,22 +597,17 @@ class SemanticIndex:
                     self._tomb, key.withColumn("seq", F.lit(seq))
                 )
             else:
-                idx = self.store.read_partitioned(self._cells)
-                affected, to_drop = cell_maintenance_stats(
-                    idx, key, None, "id", "cell"
-                )
+                idx = self.store.read(self._cells)
+                affected = cell_maintenance_stats(idx, key, None, "id", "cell")
                 if not affected:
                     return self._empty_pairs()
                 pre = self._pre_sizes(idx, affected)
                 rebuilt = idx.filter(F.col("cell").isin(affected)).join(
                     key, "id", "anti"
                 )
-                survivors = [c for c in affected if c not in set(to_drop)]
-                if survivors:
-                    self.store.overwrite_partitions(
-                        self._cells, rebuilt.repartition("cell"), "cell"
-                    )
-                self.store.drop_partitions(self._cells, "cell", to_drop)
+                self.store.overwrite_partitions(
+                    self._cells, rebuilt.repartition("cell"), "cell", affected
+                )
         return self._cap_crossing_pairs(self._stored(), affected, pre)
 
     # -- append-log compaction -----------------------------------------
@@ -625,11 +618,11 @@ class SemanticIndex:
         reconcile; ``maybe_compact`` trades one rewrite against that
         recurring cost — the LSM compaction decision, surfaced as
         telemetry exactly like ``occupancy``/``needs_retrain``."""
-        physical = self.store.read_partitioned(self._cells).count()
+        physical = self.store.read(self._cells).count()
         live = self._stored().count()
         tomb = (
-            self.store.read_appendable(self._tomb).count()
-            if self.store.exists_appendable(self._tomb)
+            self.store.read(self._tomb).count()
+            if self.store.exists(self._tomb)
             else 0
         )
         return {
@@ -644,30 +637,24 @@ class SemanticIndex:
 
     def compact(self) -> None:
         """Fold the append log down: rewrite the cells table from the
-        LIVE view (one full dynamic write — the cost every overwrite-
-        mode epoch pays) and drop the tombstone log. Live rows are
-        re-stamped at the CURRENT epoch seq, not 0: a crash between
-        the rewrite and ``drop_appendable`` leaves the old tombstones
-        (all at seq ≤ current) in place, and rows at the current seq
-        survive them under the ``seq >= tombstone_seq`` liveness rule
-        — restamping to 0 would let those stale tombstones silently
-        kill every previously-updated row. Future epochs tombstone at
-        seq+1 and still outrank. The live view is eagerly materialized
-        first — the overwrite deletes the very files its plan would
-        re-scan (and ``persist()`` would not protect an empty
-        result)."""
+        LIVE view (one full write — the cost every overwrite-mode epoch
+        pays) and drop the tombstone log. Live rows are re-stamped at
+        the CURRENT epoch seq, not 0: a crash between the rewrite and
+        ``drop`` leaves the old tombstones (all at seq ≤ current) in
+        place, and rows at the current seq survive them under the
+        ``seq >= tombstone_seq`` liveness rule — restamping to 0 would
+        let those stale tombstones silently kill every
+        previously-updated row. Future epochs tombstone at seq+1 and
+        still outrank. The live view reads the parent version, which
+        the rewrite leaves in place."""
         if not self.append_log:
             return
         with self.store.locked(self._cells):
-            live = (
-                self._stored()
-                .withColumn("seq", F.lit(self._seq()))
-                .localCheckpoint(eager=True)
+            live = self._stored().withColumn("seq", F.lit(self._seq()))
+            self.store.write(
+                self._cells, live.repartition("cell"), partition_by=["cell"]
             )
-            self.store.write_partitioned(
-                self._cells, live.repartition("cell"), "cell"
-            )
-            self.store.drop_appendable(self._tomb)
+            self.store.drop(self._tomb)
 
     def maybe_compact(self, max_dead_fraction: float = 0.3) -> dict:
         """Measure → act: compact when the dead fraction crosses the

@@ -87,9 +87,10 @@ class CdcEngine:
     ``__delta`` + ``__deleted`` are the full per-epoch change feed a
     downstream consumer (e.g. the incremental dedup index,
     operators/dedup_index.py::apply_cdc_epoch) needs to mirror the
-    table. A bootstrap's ``__delta`` is the whole table: unpartitioned,
-    its files are hard links to the main table's (``TableStore.link``),
-    so the two share bytes rather than holding two copies.
+    table. A bootstrap's ``__delta`` is the whole table: its files are
+    hard links to the main table's (``TableStore.link``), so the two
+    share bytes rather than holding two copies (with
+    ``partition_buckets`` it carries the ``_bucket`` column too).
     """
 
     BUCKET_COL = "_bucket"
@@ -108,8 +109,9 @@ class CdcEngine:
     ):
         """``partition_buckets=N`` switches the main table to hash-
         partitioned storage (``pmod(xxhash64(pk), N)``): incremental
-        runs rewrite ONLY the buckets containing changed keys (dynamic
-        partition overwrite) instead of the whole replica — the write-
+        runs rewrite ONLY the buckets containing changed keys and link
+        the others' files (``TableStore.overwrite_partitions``) instead
+        of rewriting the whole replica — the write-
         amplification fix that matters at 100 TB, where a 0.1% delta
         must not cost a 100% rewrite. Size N so one bucket ≈ a few GB
         (e.g. N=8192 for 20 TB).
@@ -135,8 +137,9 @@ class CdcEngine:
         historical state reconstructible via ``replay()``. Pick the
         mode when the table is created and keep it. (The changelog IS
         allowed to widen across a schema-change epoch — files before
-        the boundary carry the old column set and ``read_appendable``
-        merges schemas, reading the missing columns as NULL.)
+        the boundary carry the old column set, and the changelog's
+        merged ``_SCHEMA`` reads the missing columns as NULL; see
+        ``TableStore.append``.)
 
         ``schema_change_policy`` governs an epoch whose source column
         set differs from the fingerprint basis of the previous run
@@ -328,7 +331,7 @@ class CdcEngine:
         return epoch
 
     def changelog(self, name: str) -> DataFrame:
-        return self.store.read_appendable(f"{name}__changelog")
+        return self.store.read(f"{name}__changelog")
 
     def replay(self, spec: TableSpec, as_of_epoch: int) -> DataFrame:
         """The table's state as of the END of ``as_of_epoch`` (epoch 0
@@ -404,22 +407,20 @@ class CdcEngine:
         at minimum) into ``num_files``, optionally dropping epochs
         older than the last ``keep_epochs`` — the retention policy the
         append-only reference never needed (its MySQL changelog table
-        was one table, not one file per run)."""
-        predicate = None
+        was one table, not one file per run). Every append links each
+        file the history holds, so compaction also bounds that cost."""
+        log = self.changelog(name)
         if keep_epochs is not None:
             cutoff = self.current_epoch(name) - keep_epochs + 1
-            predicate = F.col(self.EPOCH_COL) >= cutoff
-        self.store.compact_appendable(
-            f"{name}__changelog", predicate=predicate, num_files=num_files
-        )
+            log = log.filter(F.col(self.EPOCH_COL) >= cutoff)
+        self.store.write(f"{name}__changelog", log, num_files=num_files)
 
     def _bucket_expr(self, pk: str):
         return F.pmod(F.xxhash64(F.col(pk)), F.lit(self.partition_buckets))
 
     def _read_main(self, name: str) -> DataFrame:
-        if self.partition_buckets:
-            return self.store.read_partitioned(name).drop(self.BUCKET_COL)
-        return self.store.read(name)
+        main = self.store.read(name)
+        return main.drop(self.BUCKET_COL) if self.partition_buckets else main
 
     # -- per-table transforms ------------------------------------------
     def _computed(self, spec: TableSpec, df: DataFrame) -> DataFrame:
@@ -442,16 +443,13 @@ class CdcEngine:
             *data_cols, row_fingerprint(data_cols, self.algo).alias("_fp")
         )
         full = self._computed(spec, with_fp)
+        main, partition_by = full.drop("_fp"), None
         if self.partition_buckets:
-            self.store.write_partitioned(
-                spec.name,
-                full.drop("_fp").withColumn(
-                    self.BUCKET_COL, self._bucket_expr(spec.primary_key)
-                ),
-                self.BUCKET_COL,
+            main = main.withColumn(
+                self.BUCKET_COL, self._bucket_expr(spec.primary_key)
             )
-        else:
-            total = self._write_counted(spec.name, full.drop("_fp"))
+            partition_by = [self.BUCKET_COL]
+        total = self._write_counted(spec.name, main, partition_by)
         self._write_fp(
             spec.name,
             full.select(
@@ -464,11 +462,7 @@ class CdcEngine:
         self._append_basis_history(spec.name, 0, data_cols)
         # Bootstrap writes straight to the main table; the delta equals
         # the full table (download.py:494 "" if table.is_empty).
-        if self.partition_buckets:
-            total = self._read_main(spec.name).count()
-            self.store.write(f"{spec.name}__delta", self._read_main(spec.name))
-        else:
-            self.store.link(f"{spec.name}__delta", spec.name)
+        self.store.link(f"{spec.name}__delta", spec.name)
         self.store.write_empty(
             f"{spec.name}__deleted", source.select(spec.primary_key).schema
         )
@@ -822,10 +816,10 @@ class CdcEngine:
         Unpartitioned, the whole table is rewritten. Partitioned, only
         the affected buckets are: all of them at a schema boundary
         (every surviving row changes shape — no pruning is possible),
-        else the buckets of the touched keys; all other buckets' files
-        stay untouched on disk (tests/test_partitioned_cdc.py checks
-        mtimes). Dynamic overwrite never replaces a bucket that ends up
-        empty, so those are dropped explicitly."""
+        else the buckets of the touched keys; the new version links
+        every other bucket's files (tests/test_partitioned_cdc.py
+        checks the inodes). A touched bucket the merge leaves empty is
+        absent from the new version."""
         pk = spec.primary_key
 
         def merge(old: DataFrame) -> DataFrame:
@@ -847,7 +841,7 @@ class CdcEngine:
         if not self.partition_buckets:
             return self._write_counted(spec.name, merge(self._read_main(spec.name)))
 
-        old = self.store.read_partitioned(spec.name)
+        old = self.store.read(spec.name)
         affected = range(self.partition_buckets)
         if not boundary:
             touched = delta.select(pk)
@@ -863,28 +857,21 @@ class CdcEngine:
         merged = merge(old.drop(self.BUCKET_COL)).withColumn(
             self.BUCKET_COL, self._bucket_expr(pk)
         )
-        # Only a delete can empty a bucket. The census runs BEFORE the
-        # write: the plan re-executes for it and the old files must
-        # still exist. Dynamic overwrite (NOT a static one, which
-        # deletes the root before the merged plan scans it) stages the
-        # new files and swaps partitions only at commit.
-        present = affected
-        if deletes is not None:
-            present = {
-                r[0] for r in merged.select(self.BUCKET_COL).distinct().collect()
-            }
-        self.store.overwrite_partitions(spec.name, merged, self.BUCKET_COL)
-        emptied = [b for b in affected if b not in present]
-        if emptied:
-            self.store.drop_partitions(spec.name, self.BUCKET_COL, emptied)
+        self.store.overwrite_partitions(
+            spec.name, merged, self.BUCKET_COL, affected
+        )
         return None
 
-    def _write_counted(self, name: str, df: DataFrame) -> int:
+    def _write_counted(
+        self, name: str, df: DataFrame, partition_by: list[str] | None = None
+    ) -> int:
         """Write ``df`` as the table's new version and return its row
         count, observed by the write job itself instead of a count()
         job over the written files."""
         obs = Observation()
-        self.store.write(name, df.observe(obs, F.count(F.lit(1)).alias("n")))
+        self.store.write(
+            name, df.observe(obs, F.count(F.lit(1)).alias("n")), partition_by
+        )
         return obs.get["n"]
 
     # -- concurrent per-table updates (start.py:55-59) -----------------

@@ -13,9 +13,10 @@ tests/test_rollup.py, no matter how the stream slices the data.
 Scale design — the state write is partition-pruned, not full-rewrite:
 the stored rollup is hash-partitioned by day (``_pday =
 to_date(bucket_ts)``), and a micro-batch only reads + rewrites the
-day-partitions its delta touches (dynamic partition overwrite,
-TableStore.overwrite_partitions). Event streams are time-ordered in
-practice, so a trigger touches the last day or two: per-trigger I/O is
+day-partitions its delta touches (TableStore.overwrite_partitions:
+the other days' files are hard-linked into the new version). Event
+streams are time-ordered in practice, so a trigger touches the last
+day or two: per-trigger I/O is
 O(touched days' state), not O(all history) — the same
 write-amplification lever as the partitioned CDC replica
 (plans/cdc.py). Aggregation state lives in storage, not Spark
@@ -56,22 +57,15 @@ def apply_rollup_delta(
     delta = bucket_rollup(batch, ts_col, value_col, keys, bucket).withColumn(
         PART_COL, F.to_date("bucket_ts")
     )
-    if not store.exists_partitioned(table):
+    if not store.exists(table):
         # align tasks with day-partitions before the write: without it
         # every aggregation task holds a mix of days and emits a file
         # into EVERY day directory (tasks x days tiny files; measured
         # 4x the files per micro-batch at sf0.1). Rollup state per day
         # is bounded (buckets x keys), so a one-task day is the right
         # shape even at 100 TB of raw events. An all-empty first batch
-        # must NOT bootstrap an empty (schema-less) partitioned dir.
-        delta = delta.persist()
-        try:
-            if delta.select(PART_COL).limit(1).count():
-                store.write_partitioned(
-                    table, delta.repartition(PART_COL), PART_COL
-                )
-        finally:
-            delta.unpersist()
+        # writes an empty version, which reads by its _SCHEMA.
+        store.write(table, delta.repartition(PART_COL), partition_by=[PART_COL])
         return
     # TWO jobs per micro-batch, no more: (1) aggregate the delta,
     # persist it, collect its touched-day list (tiny — a trigger spans
@@ -84,14 +78,12 @@ def apply_rollup_delta(
         days = [r[0] for r in delta.select(PART_COL).distinct().collect()]
         if not days:
             return  # empty batch: nothing to fold
-        current = store.read_partitioned(table).filter(
-            F.col(PART_COL).isin(days)
-        )
+        current = store.read(table).filter(F.col(PART_COL).isin(days))
         merged = rollup_merge(
             current.drop(PART_COL), delta.drop(PART_COL), keys
         ).withColumn(PART_COL, F.to_date("bucket_ts"))
         store.overwrite_partitions(
-            table, merged.repartition(PART_COL), PART_COL
+            table, merged.repartition(PART_COL), PART_COL, days
         )
     finally:
         delta.unpersist()
@@ -133,38 +125,29 @@ def rollup_repair_days(
     """Repair the stored rollup after updates/deletes of historical
     rows: recompute ONLY ``days`` (from ``affected_days``) by
     re-aggregating the post-update replica restricted to those days,
-    then dynamic-partition-overwrite them. Everything outside ``days``
-    is untouched on disk — cost is O(replica rows in touched days),
-    and the day filter pushes down to the replica's parquet scan.
+    then overwrite them. Everything outside ``days`` is linked into
+    the new version unchanged — cost is O(replica rows in touched
+    days), and the day filter pushes down to the replica's parquet
+    scan.
 
     min/max cannot retract, so a true delta-merge is impossible under
     deletes; bounded re-aggregation of invalidated partitions is the
     standard repair (the reference's TRUNCATE+rebuild,
     post_update.py:19-91, shrunk to the touched range). A day whose
-    rows were ALL deleted produces no replacement rows — dynamic
-    overwrite would leave its stale partition behind, so empty days are
-    dropped explicitly."""
+    rows were ALL deleted produces no replacement rows and is absent
+    from the new version."""
     if not days:
         return
     src = replica.filter(F.to_date(ts_col).isin(days))
     delta = bucket_rollup(src, ts_col, value_col, keys, bucket).withColumn(
         PART_COL, F.to_date("bucket_ts")
     )
-    delta = delta.persist()
-    try:
-        still = {r[0] for r in delta.select(PART_COL).distinct().collect()}
-        emptied = [d for d in days if d not in still]
-        if emptied:
-            store.drop_partitions(table, PART_COL, emptied)
-        if still:
-            # task/day alignment (see apply_rollup_delta): the repair
-            # runs at batch shuffle parallelism, which otherwise fans
-            # tasks x days files into the overwritten directories
-            store.overwrite_partitions(
-                table, delta.repartition(PART_COL), PART_COL
-            )
-    finally:
-        delta.unpersist()
+    # task/day alignment (see apply_rollup_delta): the repair runs at
+    # batch shuffle parallelism, which otherwise fans tasks x days
+    # files into the overwritten directories
+    store.overwrite_partitions(
+        table, delta.repartition(PART_COL), PART_COL, days
+    )
 
 
 def run_rollup_stream(
@@ -185,7 +168,7 @@ def run_rollup_stream(
     """Watch ``source_dir`` for event parquet drops; maintain the
     bucketed rollup incrementally, one merge per micro-batch. Returns
     the StreamingQuery. Read the current aggregate any time with
-    ``store.read_partitioned(table)`` (drop ``_pday``); coarsen it
+    ``store.read(table)`` (drop ``_pday``); coarsen it
     with ``rollup_coarsen`` — never re-reading raw events."""
     keys = keys or []
     stream = (
