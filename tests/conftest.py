@@ -177,7 +177,10 @@ def pytest_collection_modifyitems(config, items):
             matched.add((base, name))
             item.add_marker(pytest.mark.slow)
     # a renamed or deleted test must leave the list with it; a file
-    # named with ::test selectors was not collected whole
+    # named with ::test selectors was not collected whole, and --lf/--ff
+    # (last-failed) may have dropped passing tests while collecting
+    if config.getoption("lf", False) or config.getoption("failedfirst", False):
+        return
     partial = {a.split("::")[0].split("/")[-1] for a in config.args if "::" in a}
     stale = sorted(
         e for e in _SLOW_TESTS - matched if e[0] in collected - partial

@@ -78,6 +78,27 @@ def test_partitioned_delete_empties_bucket(spark, tmp_path):
     )
 
 
+def test_partitioned_change_feed_keeps_its_columns(spark, tmp_path):
+    """The bootstrap ``__delta`` is a link to the bucketed main table,
+    so it carries ``_bucket``; every later epoch's feed carries the
+    same columns, with the row's bucket in the main table."""
+    from updater_spark.sources.store import TableStore
+
+    store = TableStore(spark, str(tmp_path / "store"))
+    engine = CdcEngine(store, partition_buckets=8)
+    spec = TableSpec("items", "id")
+    s0 = [Row(id=i, v=i) for i in range(1, 21)]
+    engine.update(spec, spark.createDataFrame(s0))
+    boot = store.read("items__delta").dtypes
+    assert boot == [("id", "bigint"), ("v", "bigint"), ("_bucket", "bigint")]
+    s1 = [Row(id=i, v=(i + 100 if i == 7 else i)) for i in range(1, 21)]
+    engine.update(spec, spark.createDataFrame(s1))
+    feed = store.read("items__delta")
+    assert feed.dtypes == boot
+    main = store.read("items").filter("id = 7").collect()
+    assert [tuple(r) for r in feed.collect()] == [(7, 107, main[0]["_bucket"])]
+
+
 def test_partitioned_matches_full_rewrite(spark, tmp_path):
     """Same scenario through both storage modes ⇒ identical replicas."""
     from updater_spark.sources.store import TableStore

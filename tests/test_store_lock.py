@@ -278,3 +278,31 @@ def test_bucketed_rotation_also_locked(spark, tmp_path):
     finally:
         os.unlink(lock)
     assert store.read_bucketed_versioned("bt").count() == 8
+
+
+def test_changelog_compaction_holds_the_lock_across_read_and_write(
+    spark, tmp_path
+):
+    """An append committed between compaction's read of the changelog
+    and its write would be left out of the compacted version, so the
+    racing writer must fail loudly instead."""
+    from updater_spark.plans.cdc import CdcEngine
+
+    root = str(tmp_path / "s")
+    store, racer = TableStore(spark, root), TableStore(spark, root)
+    for i in range(3):
+        store.append("t__changelog", spark.range(i * 5, i * 5 + 5))
+    engine = CdcEngine(store)
+    read = engine.changelog
+
+    def read_then_race(name):
+        log = read(name)
+        with pytest.raises(ConcurrentWriteError):
+            racer.append("t__changelog", spark.range(100, 105))
+        return log
+
+    engine.changelog = read_then_race
+    engine.compact_changelog("t", num_files=1)
+    assert sorted(r.id for r in store.read("t__changelog").collect()) == list(
+        range(15)
+    )

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     DecimalType,
+    DoubleType,
     IntegerType,
     LongType,
     MapType,
@@ -32,6 +33,7 @@ from pyspark.sql.types import (
 
 from updater_spark.plans.cdc import CdcEngine
 from updater_spark.schema import PLAYER
+from updater_spark.sources import store as store_mod
 from updater_spark.sources.store import SCHEMA_FILE
 
 from test_cdc_cycle import make_players
@@ -215,3 +217,75 @@ def test_drop_never_reuses_a_version_number(spark, tmp_store):
     tmp_store.write("t", spark.range(2))
     assert tmp_store.versions("t") == [1]
     assert tmp_store.read("t").count() == 2
+
+
+def _fold_at(monkeypatch, min_files, ratio):
+    monkeypatch.setattr(store_mod, "FOLD_MIN_FILES", min_files)
+    monkeypatch.setattr(store_mod, "FOLD_RATIO", ratio)
+
+
+def _files(store, name):
+    return store._data_files(store.current_path(name))
+
+
+def test_append_folds_a_long_history(spark, tmp_store, monkeypatch):
+    """An append links every file of its parent until the parent holds
+    more than FOLD_RATIO times the files the append wrote and more than
+    FOLD_MIN_FILES; then it rewrites the smaller half instead. The file
+    count, and with it the links per append, stays bounded, no row is
+    lost, and a DataFrame read before a folding append still collects."""
+    _fold_at(monkeypatch, 8, 4)
+
+    def inodes(path):
+        return {os.stat(os.path.join(path, f)).st_ino for f in tmp_store._data_files(path)}
+
+    counts, folds = [], 0
+    for i in range(40):
+        parent = tmp_store.current_path("log")
+        new = spark.range(i * 10, i * 10 + 10, numPartitions=1)
+        n = len(tmp_store._data_files(parent)) if parent else 0
+        if n <= 8:
+            tmp_store.append("log", new)
+        else:  # more than max(8, 4 x 1 file): the smaller half is rewritten
+            _assert_snapshot_survives(
+                tmp_store, "log", lambda _: tmp_store.append("log", new)
+            )
+            kept = inodes(parent) & inodes(tmp_store.current_path("log"))
+            assert len(kept) == n - n // 2
+            folds += 1
+        counts.append(len(_files(tmp_store, "log")))
+    assert folds >= 3
+    assert max(counts) <= 9 + spark.sparkContext.defaultParallelism
+    assert _rows(tmp_store.read("log")) == [(i,) for i in range(400)]
+
+
+def test_partitioned_append_folds_within_partitions(spark, tmp_store, monkeypatch):
+    _fold_at(monkeypatch, 8, 2)
+    for i in range(12):
+        df = spark.range(i * 6, i * 6 + 6, numPartitions=1)
+        tmp_store.append(
+            "pt", df.withColumn("p", (F.col("id") % 3).cast("int")), partition_by=["p"]
+        )
+    rows = _rows(tmp_store.read("pt"))
+    assert rows == [(i, i % 3) for i in range(72)]
+    assert len(_files(tmp_store, "pt")) < 36  # 12 appends x 3 partitions
+    assert tmp_store.read("pt").columns == ["id", "p"]
+
+
+def test_fold_reads_older_files_at_the_widened_type(spark, tmp_store, monkeypatch):
+    """A fold reads the parent's int files under the double ``_SCHEMA``
+    and rewrites their rows as double."""
+    _fold_at(monkeypatch, 4, 1)
+    for i in range(4):
+        tmp_store.append("log", spark.createDataFrame([(i, i)], "id long, v int"))
+    tmp_store.append("log", spark.createDataFrame([(9, 1.5)], "id long, v double"))
+    tmp_store.append("log", spark.createDataFrame([(10, 2.5)], "id long, v double"))
+    log = tmp_store.read("log")
+    assert log.schema["v"].dataType == DoubleType()
+    assert _rows(log) == [(0, 0.0), (1, 1.0), (2, 2.0), (3, 3.0), (9, 1.5), (10, 2.5)]
+    cur = tmp_store.current_path("log")
+    files = [pq.read_table(os.path.join(cur, f)) for f in _files(tmp_store, "log")]
+    assert any(
+        str(t.schema.field("v").type) == "double" and min(t["id"].to_pylist()) < 4
+        for t in files
+    )

@@ -89,8 +89,9 @@ class CdcEngine:
     operators/dedup_index.py::apply_cdc_epoch) needs to mirror the
     table. A bootstrap's ``__delta`` is the whole table: its files are
     hard links to the main table's (``TableStore.link``), so the two
-    share bytes rather than holding two copies (with
-    ``partition_buckets`` it carries the ``_bucket`` column too).
+    share bytes rather than holding two copies. With
+    ``partition_buckets`` every epoch's ``__delta`` carries the main
+    table's ``_bucket`` column, the bootstrap one included.
     """
 
     BUCKET_COL = "_bucket"
@@ -407,13 +408,15 @@ class CdcEngine:
         at minimum) into ``num_files``, optionally dropping epochs
         older than the last ``keep_epochs`` — the retention policy the
         append-only reference never needed (its MySQL changelog table
-        was one table, not one file per run). Every append links each
-        file the history holds, so compaction also bounds that cost."""
-        log = self.changelog(name)
-        if keep_epochs is not None:
-            cutoff = self.current_epoch(name) - keep_epochs + 1
-            log = log.filter(F.col(self.EPOCH_COL) >= cutoff)
-        self.store.write(f"{name}__changelog", log, num_files=num_files)
+        was one table, not one file per run). The lock spans the read
+        and the write: an append committed in between would be left
+        out of the compacted version."""
+        with self.store.locked(f"{name}__changelog"):
+            log = self.changelog(name)
+            if keep_epochs is not None:
+                cutoff = self.current_epoch(name) - keep_epochs + 1
+                log = log.filter(F.col(self.EPOCH_COL) >= cutoff)
+            self.store.write(f"{name}__changelog", log, num_files=num_files)
 
     def _bucket_expr(self, pk: str):
         return F.pmod(F.xxhash64(F.col(pk)), F.lit(self.partition_buckets))
@@ -716,7 +719,13 @@ class CdcEngine:
             if evolution:
                 self._append_basis_history(spec.name, epoch, data_cols)
 
-            self.store.write(f"{spec.name}__delta", delta)
+            self.store.write(
+                f"{spec.name}__delta",
+                # the bootstrap feed's columns: a link to the main table
+                delta.withColumn(self.BUCKET_COL, self._bucket_expr(pk))
+                if self.partition_buckets
+                else delta,
+            )
             # the epoch's applied delete keys — empty when the guard
             # tripped or nothing was deleted, so consumers never act
             # on skipped deletes
